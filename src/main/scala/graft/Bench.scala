@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Uses the `noop` sink so the full plan executes
   * (a bare `count()` would let Catalyst prune projections and windows).
@@ -33,10 +31,12 @@ object Bench {
     */
   private[graft] object ExtCpu {
     /** (busy, total) jiffies from the aggregate `cpu ` line of /proc/stat
-      * (idle + iowait count as not-busy).
+      * (idle + iowait count as not-busy). Only the first 8 fields (user
+      * .. steal) are summed: `guest` and `guest_nice` are already counted
+      * inside `user` and `nice`, so adding them counts guest time twice.
       */
     def parseMachine(statText: String): (Long, Long) = {
-      val f = statText.linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
+      val f = statText.linesIterator.next().trim.split("\\s+").slice(1, 9).map(_.toLong)
       val idle = f(3) + (if (f.length > 4) f(4) else 0L)
       (f.sum - idle, f.sum)
     }
@@ -75,17 +75,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // superseded iterative-loop checkpoints are deleted as their RDDs
-      // are GC'd (must be in the conf at context creation — see util.Ckpt)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(cpus.toInt)
 
     val loadStart = loadavg()
     // AMBIENT-LOAD SELF-LABELING (round 17; trigger replaced round 18):
@@ -154,10 +144,14 @@ object Bench {
     val contaminated =
       if (extFrac >= 0.0) extFrac > 0.10 else loadStart > 1.0
     if (contaminated) System.err.println(
-      f"[bench] WARNING: external processes consumed ${extFrac * 100}%.1f%% " +
-        "of machine CPU during the run (>10%%) — timings overstate; artifact " +
-        "is marked \"contaminated\":true (compare against the quiet-window " +
-        "anchor in receipts/, not across rounds)")
+      (if (extFrac >= 0.0)
+        f"[bench] WARNING: external processes consumed ${extFrac * 100}%.1f%% " +
+          "of machine CPU during the run (>10%)"
+      else
+        "[bench] WARNING: /proc/stat was unreadable, so the loadavg " +
+          f"fallback decided (starting 1-min loadavg $loadStart%.2f > 1.0)") +
+        " — timings overstate; artifact is marked \"contaminated\":true " +
+        "(compare against the quiet-window anchor in receipts/, not across rounds)")
     val qs = results.map { case (k, dts) => "\"" + k + "\":" + f"${dts.min}%.3f" }.mkString("{", ",", "}")
     // every per-rep time, not just head/min — lets a reader see WHICH rep
     // an outlier landed on (external-load spikes hit isolated reps;

@@ -101,9 +101,29 @@ object Tables {
       case _ => df
     }
 
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf read once per
+    * JVM at the first codegen; one entry per generated class and
+    * classloader). Spark's default of 100 is below one pass of a single
+    * workload: the iterative vec/text loop (q161+q165+q177) touches ~290
+    * entries and the LOB path ~190, so the LRU evicted every class before
+    * its reuse and each repeated pass Janino-compiled ~90–160 classes
+    * again and JIT-warmed them from scratch.
+    *
+    * Measured over the full catalog at sf0.001 on `local[4]`: the largest
+    * single query touches 172 entries (q166), the median query 31, one
+    * pass over all 184 queries 3,343; an entry holds ~31 KB of live heap.
+    * 1000 keeps any query or workload above warm with room to spare and
+    * caps the cache at ~31 MB; only a JVM that loops over the whole
+    * catalog would need ~3,400 entries (~100 MB).
+    */
+  val CodegenCacheEntries = 1000
+
   /** Local session for tests/benchmarks: tuned for local[N] (shuffle
     * partitions = cores, AQE on, UTC). On a real cluster the same code
-    * runs unchanged; only master/memory configs differ.
+    * runs unchanged; only master/memory configs differ. Every session
+    * the repo builds (Bench, Verify, the probes, the test JVM) comes from
+    * here, so all of them get the same codegen reuse settings.
     */
   def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession.builder()
@@ -116,6 +136,15 @@ object Tables {
       // superseded iterative-loop checkpoints are deleted as their RDDs
       // are GC'd (must be in the conf at context creation — see util.Ckpt)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Each streaming query runs on a cloned session; with artifact
+      // isolation on (the Spark 4 default) that clone gets its own
+      // executor classloader, the classloader is part of the codegen
+      // cache key, and so every restart of a streaming twin recompiled
+      // its classes (12 of the OHLC twin's 13) while the stale entries
+      // pinned the dead loaders until evicted. The engine never adds
+      // per-session jars or artifacts, so one shared loader loses nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

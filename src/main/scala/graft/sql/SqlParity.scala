@@ -1,7 +1,6 @@
 package graft.sql
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** SQL-surface ≡ catalog parity sweep at an arbitrary scale directory.
   *
@@ -27,14 +26,7 @@ object SqlParity {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(cpus.toInt)
 
     var fails = 0
     // optional second arg: comma-separated subset for targeted re-proof

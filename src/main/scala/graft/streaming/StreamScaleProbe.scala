@@ -155,10 +155,14 @@ object StreamScaleProbe {
       require(fs.nonEmpty, s"replay dir $replay holds no parquet files")
       val f0 = fs.min
       val d = new java.io.File(s"$replay-warm1")
-      if (d.exists()) d.listFiles().foreach(_.delete())
+      // recursive, and throws if anything is left: a flat per-file
+      // delete skipped subdirectories and ignored failed deletes, so the
+      // copy below could land next to (or fail on) a stale file
+      if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
       val tgt = new java.io.File(d, new java.io.File(f0).getName)
       java.nio.file.Files.createDirectories(d.toPath)
-      java.nio.file.Files.copy(java.nio.file.Paths.get(f0), tgt.toPath)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(f0), tgt.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       d.getAbsolutePath
     }
     locally {

@@ -17,6 +17,15 @@ class BenchExtCpuSpec extends AnyFunSuite {
     assert(busy === 160L) // 1010 - idle(800) - iowait(50)
   }
 
+  test("parseMachine: guest and guest_nice are not counted twice") {
+    // guest (40) and guest_nice (10) are already inside user (100) and
+    // nice (20); only user .. steal may be summed
+    val stat = "cpu  100 20 30 800 50 5 5 0 40 10\n"
+    val (busy, total) = Bench.ExtCpu.parseMachine(stat)
+    assert(total === 1010L)
+    assert(busy === 160L)
+  }
+
   test("parseSelf: utime+stime+cutime+cstime, comm with spaces and parens") {
     val stat = "1234 (java (x) y) S 1 1 1 0 -1 4194560 9999 0 0 0 " +
       "700 300 11 9 20 0 64 0 123456 0 0"

@@ -1,12 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object PeekPlan {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Tables.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       val q = graft.SparkEntry.catalog.find(_.name == name).get

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiling harness for q11's metric bundle: times the synthetic
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfQ11 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Tables.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     def t(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

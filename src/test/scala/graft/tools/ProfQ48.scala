@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level profile of the q48 dedup pipeline: signatures+bands,
   * candidate join, verify join, connected components, final join.
   * Run: `sbt "Test/runMain graft.tools.ProfQ48"`.
@@ -9,11 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ProfQ48 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Tables.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time specific catalog queries (driver-bench conditions, noop sink):
   * `sbt "Test/runMain graft.tools.TimeQ q01_pricing_summary ..."`.
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Tables.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     (1 to 2).foreach { round =>
