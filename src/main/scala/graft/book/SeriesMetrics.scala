@@ -27,9 +27,17 @@ object SeriesMetrics {
     */
   def ofiL1Strict(w: WindowSpec,
                   bidPx: Column = col("bid1_price"), bidSz: Column = col("bid1_size"),
-                  askPx: Column = col("ask1_price"), askSz: Column = col("ask1_size")): Column = {
-    val pb = lag(bidPx, 1).over(w); val sb = lag(bidSz, 1).over(w)
-    val pa = lag(askPx, 1).over(w); val sa = lag(askSz, 1).over(w)
+                  askPx: Column = col("ask1_price"), askSz: Column = col("ask1_size")): Column =
+    ofiL1StrictFrom(bidPx, bidSz, askPx, askSz,
+      lag(bidPx, 1).over(w), lag(bidSz, 1).over(w), lag(askPx, 1).over(w), lag(askSz, 1).over(w))
+
+  /** [[ofiL1Strict]] from the previous row's quotes given as columns
+    * (`pb`, `sb`, `pa`, `sa` = lag 1 of each input, as `BookSql.lagLayer`
+    * names them), so a caller that names its lags once evaluates each lag
+    * once instead of once per reference.
+    */
+  def ofiL1StrictFrom(bidPx: Column, bidSz: Column, askPx: Column, askSz: Column,
+                      pb: Column, sb: Column, pa: Column, sa: Column): Column = {
     val bidTerm = when(bidPx > pb, bidSz - sb).when(bidPx < pb, -sb).otherwise(lit(0.0))
     val askTerm = when(askPx < pa, askSz - sa).when(askPx > pa, -sa).otherwise(lit(0.0))
     // poison: any NULL input → NULL result (matches the reference's early return)
@@ -46,9 +54,16 @@ object SeriesMetrics {
     */
   def ofiEvent(w: WindowSpec,
                bidPx: Column = col("bid1_price"), bidSz: Column = col("bid1_size"),
-               askPx: Column = col("ask1_price"), askSz: Column = col("ask1_size")): Column = {
-    val pb = lag(bidPx, 1).over(w); val sb = lag(bidSz, 1).over(w)
-    val pa = lag(askPx, 1).over(w); val sa = lag(askSz, 1).over(w)
+               askPx: Column = col("ask1_price"), askSz: Column = col("ask1_size")): Column =
+    ofiEventFrom(bidPx, bidSz, askPx, askSz,
+      lag(bidPx, 1).over(w), lag(bidSz, 1).over(w), lag(askPx, 1).over(w), lag(askSz, 1).over(w),
+      row_number().over(w) === 1)
+
+  /** [[ofiEvent]] from named lag columns (see [[ofiL1StrictFrom]]);
+    * `first` is true on each series' first row.
+    */
+  def ofiEventFrom(bidPx: Column, bidSz: Column, askPx: Column, askSz: Column,
+                   pb: Column, sb: Column, pa: Column, sa: Column, first: Column): Column = {
     val qb = coalesce(bidSz, lit(0.0)); val qbPrev = coalesce(sb, lit(0.0))
     val qa = coalesce(askSz, lit(0.0)); val qaPrev = coalesce(sa, lit(0.0))
     // only a missing PREV forces both indicators true (event_metrics.py:
@@ -60,8 +75,7 @@ object SeriesMetrics {
     val geA = when(pa.isNull, lit(1.0)).when(askPx >= pa, lit(1.0)).otherwise(lit(0.0))
     val dB = geB * qb - leB * qbPrev
     val dA = leA * qa - geA * qaPrev
-    val rn = row_number().over(w)
-    when(rn === 1, lit(0.0)).otherwise(dB - dA)
+    when(first, lit(0.0)).otherwise(dB - dA)
   }
 
   /** W3 `plot_cli.py:145-161` — LOBSTER-style strict OFI with NaN→0:

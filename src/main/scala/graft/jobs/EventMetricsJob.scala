@@ -36,34 +36,30 @@ object EventMetricsJob {
     val qb = coalesce(d("bid1_size"), lit(0.0))
     val qa = coalesce(d("ask1_size"), lit(0.0))
 
-    // golden: single-series parity; default: per-key event-time windows
-    // (keys missing from the input degrade to the single-series mode)
-    val keys = if (golden) Seq.empty[String] else partitionKeys.filter(raw.columns.contains)
-    val ordered =
-      (if (golden) raw.coalesce(1) else raw).withColumn("_rid", monotonically_increasing_id())
-    val ord = Seq(col("ts_ms").cast("long"), col("_rid"))
-    val w = if (keys.isEmpty) Window.orderBy("_rid")
-            else Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
+    val layout = SeriesLayout(raw, partitionKeys, golden)
+    val w = layout.spec
 
     val mid = (bb + ba) / 2.0
+    // every lag once, as a named column over the one spec
+    val lagged = layout.rows.select(col("*"),
+      lag(bb, 1).over(w).as("_pb"), lag(qb, 1).over(w).as("_sb"),
+      lag(ba, 1).over(w).as("_pa"), lag(qa, 1).over(w).as("_sa"),
+      (row_number().over(w) === 1).as("_first"),
+      lag(log(mid), 1).over(w).as("_log_mid_prev"))
+
     val spreadBps = when(bb > 0 && ba > 0, (ba - bb) / mid * lit(1e4))
     val micro = BookMetrics.micropriceEvent(bb, ba, d("bid1_size"), d("ask1_size"))
-    val ofi = SeriesMetrics.ofiEvent(w, bb, qb, ba, qa)
-    val retMid = log(mid) - lag(log(mid), 1).over(w)
+    val ofi = SeriesMetrics.ofiEventFrom(bb, qb, ba, qa,
+      col("_pb"), col("_sb"), col("_pa"), col("_sa"), col("_first"))
     val frame = w.rowsBetween(-(rvWindow - 1), Window.currentRow)
+    val r = col("ret_mid")
+    val rvName = s"rv_event_$rvWindow"
 
-    val out = ordered
-      .withColumn("mid", mid)
-      .withColumn("spread_bps", spreadBps)
-      .withColumn("microprice", micro)
-      .withColumn("ofi_l1", ofi)
-      .withColumn("ret_mid", retMid)
-      .withColumn(s"rv_event_$rvWindow",
-        when(count(col("ret_mid")).over(frame) === rvWindow,
-          sum(col("ret_mid") * col("ret_mid")).over(frame)))
-    val sorted = if (keys.isEmpty) out.orderBy("_rid")
-                 else out.orderBy(keys.map(col) ++ ord: _*)
-    sorted.select((baseCols ++ Seq("mid", "spread_bps", "microprice", "ofi_l1", "ret_mid",
-      s"rv_event_$rvWindow")).map(col): _*)
+    val out = lagged
+      .withColumns(Map("mid" -> mid, "spread_bps" -> spreadBps, "microprice" -> micro,
+        "ofi_l1" -> ofi, "ret_mid" -> (log(mid) - col("_log_mid_prev"))))
+      .withColumn(rvName, when(count(r).over(frame) === rvWindow, sum(r * r).over(frame)))
+    layout.ordered(out).select((baseCols ++ Seq("mid", "spread_bps", "microprice", "ofi_l1",
+      "ret_mid", rvName)).map(col): _*)
   }
 }

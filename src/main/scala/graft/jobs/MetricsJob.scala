@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.book.BookMetrics
+import graft.book.{BookMetrics, SeriesMetrics}
 import graft.io.BookIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,11 +21,22 @@ import org.apache.spark.sql.types.DecimalType
   *   - first-row OFI is "" and rows during RV warmup are "".
   *
   * Partitioning: the default treats the input as many series keyed by
-  * `partitionKeys` (windows partition on them, ordered by event time) —
-  * the shape that scales to a 1000-executor cluster. `golden = true`
-  * reproduces the reference's one-file-=-one-series mode exactly
-  * (coalesce(1) + a single unpartitioned window, byte-parity with the
-  * committed `_metrics.csv`) and is only right for per-file recordings.
+  * `partitionKeys` — the shape that scales to a 1000-executor cluster.
+  * Each series is sorted exactly once ([[SeriesLayout]]): one range
+  * exchange on the keys into `spark.sql.shuffle.partitions` tasks, one
+  * Sort for the one window spec (keys, then `ts_ms`, then input order),
+  * and the output order needs no further exchange or sort. The plan is
+  * Exchange rangepartitioning → Sort → Window (lags) → Window (RV) →
+  * Project. `golden = true` reproduces the reference's one-file-=-one-series
+  * mode exactly (coalesce(1) + a single unpartitioned window ordered by
+  * input row, byte-parity with the committed `_metrics.csv`) and is only
+  * right for per-file recordings.
+  *
+  * The reset-on-gap RV needs no gap-group window: its frame is the last W
+  * rows of the series and it is defined only when all W returns are
+  * non-null. Such a frame contains no gap, so it lies inside one gap
+  * group and holds the same W rows as the group-partitioned frame; with
+  * fewer than W non-null returns neither frame reaches W.
   */
 object MetricsJob {
 
@@ -52,44 +63,32 @@ object MetricsJob {
       "notional_bid_k" -> BookMetrics.notionalDepth(levels("bid")),
       "notional_ask_k" -> BookMetrics.notionalDepth(levels("ask")))
 
-    // golden: one file = one ordered series (single window, stable row id);
-    // default: per-key windows ordered by event time, _rid as tiebreak.
-    // Keys missing from the input (older schemas) degrade to the
-    // reference's one-file-=-one-series semantics.
-    val keys = if (golden) Seq.empty[String] else partitionKeys.filter(raw.columns.contains)
-    val ordered =
-      (if (golden) raw.coalesce(1) else raw).withColumn("_rid", monotonically_increasing_id())
-    val ord = Seq(col("ts_ms").cast("long"), col("_rid"))
-    val w = if (keys.isEmpty) Window.orderBy("_rid")
-            else Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val layout = SeriesLayout(raw, partitionKeys, golden)
+    val w = layout.spec
 
-    // RV on the formatted mid (≡ round(mid, 10)), log returns, reset-on-gap
-    val midR = round(BookMetrics.mid(bb, ba), 10)
-    val prev = lag(midR, 1).over(w)
-    val ret = when(midR.isNotNull && prev.isNotNull && midR > 0 && prev > 0,
-      graft.book.SeriesMetrics.logReturn(midR, w))
-    val enriched = ordered
-      .withColumn("_ret", ret)
-      .withColumn("_gap", count(when(col("_ret").isNull, lit(1))).over(wRun))
-    val gw = if (keys.isEmpty) Window.partitionBy("_gap").orderBy("_rid")
-             else Window.partitionBy((keys :+ "_gap").map(col): _*).orderBy(ord: _*)
-    val frame = gw.rowsBetween(-(rvWindow - 1), Window.currentRow)
-    val rv = when(col("_ret").isNotNull && count(col("_ret")).over(frame) === rvWindow,
-      sum((col("_ret") * col("_ret")).cast(DecimalType(38, 30))).over(frame).cast("double"))
+    // every lag once, as a named column over the one spec
+    val midR = round(BookMetrics.mid(bb, ba), 10) // RV reads the formatted mid
+    val bp = d("bid1_price"); val ap = d("ask1_price")
+    val lagged = layout.rows.select(col("*"), lag(midR, 1).over(w).as("_mid_prev"),
+      lag(bp, 1).over(w).as("_pb"), lag(qb, 1).over(w).as("_sb"),
+      lag(ap, 1).over(w).as("_pa"), lag(qa, 1).over(w).as("_sa"))
 
-    val ofi = graft.book.SeriesMetrics.ofiL1Strict(w,
-      d("bid1_price"), d("bid1_size"), d("ask1_price"), d("ask1_size"))
+    val prev = col("_mid_prev")
+    val ret = when(midR.isNotNull && prev.isNotNull && midR > 0 && prev > 0, log(midR / prev))
+    // reset-on-gap without a gap-group window (see the scaladoc): count
+    // == W means W non-null returns, so the frame holds no gap
+    val frame = w.rowsBetween(-(rvWindow - 1), Window.currentRow)
+    val r = col("_ret")
+    val rv = when(count(r).over(frame) === rvWindow,
+      sum((r * r).cast(DecimalType(38, 30))).over(frame).cast("double"))
+    val ofi = SeriesMetrics.ofiL1StrictFrom(bp, qb, ap, qa,
+      col("_pb"), col("_sb"), col("_pa"), col("_sa"))
 
-    val out = enriched
-      .withColumns(metrics.map { case (n, c) => n -> BookIO.fmt10(c) }.toMap)
-      .withColumn("rv_window", lit(rvWindow))
-      .withColumn("rv", BookIO.fmt10(rv))
-      .withColumn("ofi_l1", BookIO.fmt10(ofi))
-    val addCols = metrics.map(_._1) ++ Seq("rv_window", "rv", "ofi_l1")
-    val sorted = if (keys.isEmpty) out.orderBy("_rid")
-                 else out.orderBy(keys.map(col) ++ ord: _*)
-    sorted.select((baseCols ++ addCols).map(col): _*)
+    val finished = lagged.withColumn("_ret", ret)
+      .withColumns((metrics :+ ("rv" -> rv) :+ ("ofi_l1" -> ofi)).toMap)
+    def fmt(name: String): Column = BookIO.fmt10(col(name)).as(name)
+    layout.ordered(finished).select(baseCols.map(col) ++ metrics.map(m => fmt(m._1)) ++
+      Seq(lit(rvWindow).as("rv_window"), fmt("rv"), fmt("ofi_l1")): _*)
   }
 
   /** CLI-shaped entry point mirroring the reference's metrics writer

@@ -2,6 +2,11 @@ package graft
 
 import graft.jobs.{MetricsJob, PlotSeriesJob, TwapJob}
 import graft.streaming.Recorder
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalactic.Tolerance._
 import java.nio.file.Files
@@ -28,12 +33,24 @@ class JobsSpec extends SparkTestBase {
     Recorder.synthesizeBook(spark.range(400).toDF("value"), depth = 5)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/book.parquet")
     val out = MetricsJob.run(spark, s"$dir/book.parquet", depth = 5, rvWindow = 5)
-    // the window stage must hash-partition on the keys (not coalesce(1))
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("hashpartitioning") && plan.contains("symbol"),
-      s"expected key-partitioned window exchange, got:\n${plan.take(800)}")
+    val rows = out.collect()
+    // final AQE plan: each series is sorted once — one range exchange on
+    // the keys, one Sort, and nothing shuffles the window output again
+    val plan = out.queryExecution.executedPlan
+    val shuffles = PlanNodes.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, s"expected one shuffle, got:\n$plan")
+    shuffles.head.outputPartitioning match {
+      case RangePartitioning(ordering, _) =>
+        assert(ordering.map(_.child.asInstanceOf[Attribute].name) === Seq("exchange_id", "symbol"))
+      case other => fail(s"expected range partitioning on the keys, got $other")
+    }
+    assert(PlanNodes.collect(plan) { case s: SortExec => s }.size === 1, s"expected one Sort:\n$plan")
+    PlanNodes.collect(plan) { case e: Exchange => e }.foreach { e =>
+      assert(PlanNodes.collect(e.child) { case w: WindowExec => w }.isEmpty,
+        s"an exchange above a Window:\n$plan")
+    }
     // each symbol's series equals its single-series golden-mode run
-    val byAll = out.collect().groupBy(r => r.getString(r.fieldIndex("symbol")))
+    val byAll = rows.groupBy(r => r.getString(r.fieldIndex("symbol")))
     for (sym <- Seq("SYN0", "SYN1")) {
       spark.read.parquet(s"$dir/book.parquet").filter(col("symbol") === sym)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/$sym.parquet")
