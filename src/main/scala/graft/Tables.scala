@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{NioLocalFileSystem, NioLocalFs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -123,7 +124,20 @@ object Tables {
     * partitions = cores, AQE on, UTC). On a real cluster the same code
     * runs unchanged; only master/memory configs differ. Every session
     * the repo builds (Bench, Verify, the probes, the test JVM) comes from
-    * here, so all of them get the same codegen reuse settings.
+    * here, so all of them get the same codegen reuse settings and the
+    * same local filesystem.
+    *
+    * `file:` goes through [[graft.io.NioLocalFileSystem]] (`FileSystem`)
+    * and [[graft.io.NioLocalFs]] (`FileContext`, which Spark's streaming
+    * checkpoint manager uses). Spark ships without libhadoop, so Hadoop's
+    * stock local filesystem forks `chmod` for every file, `.crc` file and
+    * directory it creates and `readlink` on every link-status lookup of a
+    * checkpoint rename. A JFR count over one `lob_scaled` benchmark run
+    * (4 vCPU) found 1,922 process starts, 616 per timed pass, ~2 ms each;
+    * with these classes it found 15, none of them `chmod` or `readlink`,
+    * and the median micro-batch fell from 588 to 289 ms. `.crc`
+    * checksums, rename-without-overwrite and the permission bits on disk
+    * are the same as with the stock classes.
     */
   def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession.builder()
@@ -145,6 +159,9 @@ object Tables {
       // pinned the dead loaders until evicted. The engine never adds
       // per-session jars or artifacts, so one shared loader loses nothing.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // fork-free local `file:` IO for FileSystem and FileContext (above)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -52,8 +52,17 @@ object BookIO {
           s"parquet write failed (${e.getMessage}); falling back to CSV")
         // an overwrite-mode failure can leave a deleted/partial dir at
         // `path`; remove it so a later readAny of a stale parquet path
-        // can't see a corrupt artifact
-        deleteRecursively(new java.io.File(path))
+        // can't see a corrupt artifact. Whatever is there goes (a dir, or
+        // a file or dangling link the write could not replace), and a
+        // failed removal raises, with the parquet error attached, rather
+        // than leave the artifact next to a CSV.
+        val left = new java.io.File(path)
+        try {
+          if (left.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(left)
+          else java.nio.file.Files.deleteIfExists(left.toPath)
+        } catch {
+          case scala.util.control.NonFatal(d) => d.addSuppressed(e); throw d
+        }
         val csvPath = path.replaceAll("\\.(parquet|pq)$", "") + ".csv"
         val stringified = df.schema.fields.foldLeft(df) { (acc, f) =>
           f.dataType match {
@@ -66,11 +75,6 @@ object BookIO {
         writeGoldenCsv(stringified, csvPath)
         csvPath
     }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
 
   /** S11 accumulating summary sink (`impact_twap_cli.py:51-57`): append
     * the frame's rows to ONE growing CSV, writing the header only when

@@ -1,13 +1,3 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (avoids the sbt lock; the verify
-# skill's recipe). usage: tools/java_run.sh <mainClass> [args...]
-# Heap via GRAFT_XMX (default 48g).
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $ADDOPENS -Xmx${GRAFT_XMX:-48g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+# tools/run_main.sh with a 48g default heap: tools/java_run.sh <mainClass> [args...]
+GRAFT_XMX=${GRAFT_XMX:-48g} exec "$(dirname "${BASH_SOURCE[0]}")/run_main.sh" "$@"

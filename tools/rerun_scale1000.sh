@@ -10,7 +10,7 @@
 #   3. run the 10-check structural audit incl. the 50k-doc sampled
 #      exact-CC DuckDB oracle        -> receipts/audit_scale1000_r14.log
 #
-# Usage: tools/rerun_scale1000.sh   (from /root/repo; ~30-45 min)
+# Usage: tools/rerun_scale1000.sh   (from any directory; ~30-45 min)
 set -e
 cd "$(dirname "$0")/.."
 
