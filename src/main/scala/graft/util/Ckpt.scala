@@ -17,6 +17,15 @@ import org.apache.spark.SparkContext
   *      never removes files still referenced at shutdown, e.g. the
   *      session-lifetime memos). Handled by a JVM shutdown hook that
   *      removes this context's checkpoint directory recursively.
+  *
+  * A checkpoint keeps no partitioning. Under AQE the plan that
+  * `Dataset.checkpoint()` runs reports UnknownPartitioning, so the
+  * checkpointed frame's scan does too: a `repartition(k).checkpoint()`
+  * frame is exchanged on `k` again by a window or aggregation keyed on
+  * `k` (seen in the final plan of a window over such a frame). An
+  * operator that wants one exchange per loop step must put the
+  * repartition and every consumer of it inside the checkpointed query,
+  * as `VectorQueries.beamVisited` does.
   */
 object Ckpt {
 

@@ -2095,8 +2095,8 @@ object VectorQueries {
 
   // --------------------------------------------------------------- q160
   private val NdK = 6       // graph degree (neighbors kept per node)
-  private val NdRounds = 2  // neighbor-of-neighbor refinement rounds
-  private val NdProbes = 32 // audit probe set: vec_id < NdProbes
+  private[vec] val NdRounds = 2  // neighbor-of-neighbor refinement rounds
+  private[vec] val NdProbes = 32 // audit probe set: vec_id < NdProbes
 
   /** Embeddings with their ordered-fold squared norms — the frame every
     * NN-descent stage (init, distances, audit, beam search) reads.
@@ -2106,7 +2106,7 @@ object VectorQueries {
     * (same adds, same order — see the fold helpers' contract). Repeated
     * calls persist the same logical plan; Spark's CacheManager dedupes.
     */
-  private def ndEn(s: SparkSession, dir: String): DataFrame =
+  private[vec] def ndEn(s: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"nd-en:$dir") {
       Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
@@ -2158,8 +2158,8 @@ object VectorQueries {
     pairs.groupBy("src").agg(collect_set(col("nbr")).as("ns"))
       .select(col("src"), explode(col("ns")).as("nbr"))
 
-  private def buildEdgesOver(en: DataFrame, n: Long, rounds: Int,
-                             k: Int = NdK): DataFrame = {
+  private[vec] def buildEdgesOver(en: DataFrame, n: Long, rounds: Int,
+                                  k: Int = NdK): DataFrame = {
     ensureCkptDir(en.sparkSession)
     val init = dedupBySrc(initPairsOver(en, n, k))
     // exact squared L2 for a (src, nbr) pair frame: two hash joins on
@@ -2228,7 +2228,7 @@ object VectorQueries {
     * same structure, built once per session even with cache clears
     * between catalog queries (the cellRanks/dedupGroups memo pattern).
     */
-  private def ndGraph(s: SparkSession, dir: String): DataFrame =
+  private[vec] def ndGraph(s: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"nd-graph:$dir") {
       // buildEdgesOver checkpoints every generation, so the returned
       // final round is already a reliable flat-scan frame
@@ -2383,8 +2383,8 @@ object VectorQueries {
     })
 
   // --------------------------------------------------------------- q161
-  private val BsBeam = 4 // beam width (candidates kept per probe per hop)
-  private val BsHops = 3 // fixed hop count (oracle-unrollable)
+  private[vec] val BsBeam = 4 // beam width (candidates kept per probe per hop)
+  private[vec] val BsHops = 3 // fixed hop count (oracle-unrollable)
 
   /** Greedy beam search over the NN-descent graph (q160's serving
     * structure — HNSW layer-0 / DiskANN-style traversal): every probe
@@ -2400,7 +2400,11 @@ object VectorQueries {
     * Scale shape: the graph is the memoized checkpointed q160 frame;
     * each hop joins the data-sized edge table against a ≤ NdProbes·B
     * row broadcast frontier (never the reverse), and every beam/visited
-    * set is bounded by construction. Deterministic: fixed entry, fixed
+    * set is bounded by construction. Each hop is one checkpointed query
+    * with one exchange on q_id ([[beamVisited]]); after the hops, the
+    * top-1 window and the visited count each exchange the final
+    * generation on q_id once more. A steady sf0.001 pass on local[4]
+    * runs 29 stages, down from 40. Deterministic: fixed entry, fixed
     * hops, ordered-fold distances, id tie breaks — identical traversal
     * in both engines.
     */
@@ -2411,6 +2415,17 @@ object VectorQueries {
     * embeddings come from `enGraph`, and return the full visited frame
     * (q_id, node, d2). Each hop joins the data-sized edge table against
     * a broadcast bounded frontier — never the reverse.
+    *
+    * One exchange per hop: the hop query repartitions the old
+    * generation ∪ the scored expansion on q_id, and both the
+    * (q_id, node) min and the beam rank `rb` over q_id run on that one
+    * partitioning. `rb` is kept in the checkpoint, so the next frontier
+    * is a filter on it. Expansion draws are not de-duplicated: a node
+    * reached from two frontier nodes scores the same d2 twice, and the
+    * min keeps one row. The repartition must sit inside the checkpointed
+    * query: under AQE `Dataset.checkpoint()` records UnknownPartitioning
+    * (see [[graft.util.Ckpt]]), so a window over a checkpoint of a
+    * q_id-partitioned frame still exchanges it again.
     */
   private[vec] def beamVisited(probeEmb: DataFrame, enGraph: DataFrame,
                           edges: DataFrame, e0: Long, e1: Long,
@@ -2429,27 +2444,26 @@ object VectorQueries {
     // uncheckpointed loop's LOGICAL plan DOUBLES per hop — at a hops=10
     // sweep the 2^h-sized per-action plan-description stringification
     // alone pinned the driver. The frames are tiny (≤ probes·(1 +
-    // B·deg·hops) rows of 3 scalars → KBs), so truncating lineage per
+    // B·deg·hops) rows of 4 scalars → KBs), so truncating lineage per
     // hop costs nothing and bounds plan depth at ANY hop count; no
     // cached generations remain afterwards.
     var visited = score(probeEmb.select(col("q_id")).withColumn("node",
         when(col("q_id") === e0, lit(e1)).otherwise(lit(e0))))
       .checkpoint()
-    var frontier = visited.select("q_id", "node")
+    var frontier = visited
     for (_ <- 1 to hops) {
       val expand = edges
         .join(broadcast(frontier.select(col("q_id"), col("node").as("src"))), "src")
         .select(col("q_id"), col("nbr").as("node"))
         .filter(col("node") =!= col("q_id"))
-        .distinct()
-      visited = visited.union(score(expand))
+      visited = visited.select("q_id", "node", "d2").union(score(expand))
+        .repartition(col("q_id"))
         .groupBy("q_id", "node").agg(min(col("d2")).as("d2"))
-        .checkpoint() // eager: materializes AND truncates per hop
-      frontier = visited
         .withColumn("rb", row_number().over(wB))
-        .filter(col("rb") <= beam).select("q_id", "node")
+        .checkpoint() // eager: materializes AND truncates per hop
+      frontier = visited.filter(col("rb") <= beam)
     }
-    visited
+    visited.select("q_id", "node", "d2")
   }
 
   val q161 = Q("q161_graph_beam_search",
@@ -2594,7 +2608,46 @@ object VectorQueries {
     })
 
   // --------------------------------------------------------------- q165
-  private val LpRounds = 3 // synchronized label-propagation rounds
+  private[vec] val LpRounds = 3 // synchronized label-propagation rounds
+
+  /** [[LpRounds]] synchronized label-propagation rounds over the
+    * undirected closure of `edges` (src, nbr), as (community, n_members,
+    * min_node, max_node). Nodes without an edge drop out in round 1, as
+    * they would under any round that counts neighbour votes.
+    *
+    * Round 1 is `min(nbr)` per node: every label still equals its node's
+    * id and the adjacency is distinct, so each neighbour casts one vote
+    * for itself, every count is 1 and the tie rule picks the smallest
+    * id. Later rounds push labels instead of pulling them: a node sends
+    * its label to every nbr of its src rows, and because the closure is
+    * symmetric, what a node receives is exactly its neighbours' labels.
+    * So the labels (partitioned by node) join the adjacency (partitioned
+    * by src) on the key both are partitioned by, the votes are
+    * repartitioned once on the receiving node, and both aggregations of
+    * the round run on that partitioning: one exchange per round. The
+    * adjacency exchange runs once and AQE reuses it in every round.
+    * The rounds form one lazy plan and nothing is persisted, so the
+    * caller is left with no cached frame.
+    */
+  private[vec] def lpCommunities(edges: DataFrame): DataFrame = {
+    val adj = edges.select("src", "nbr")
+      .union(edges.select(col("nbr").as("src"), col("src").as("nbr")))
+      .repartition(col("src"))
+      .distinct()
+    var labels = adj.groupBy(col("src").as("node")).agg(min(col("nbr")).as("lbl"))
+    for (_ <- 2 to LpRounds) {
+      labels = labels.select(col("node").as("src"), col("lbl"))
+        .join(adj, "src") // co-partitioned on src: no exchange
+        .repartition(col("nbr"))
+        .groupBy(col("nbr"), col("lbl")).agg(count(lit(1)).as("c"))
+        .groupBy(col("nbr"))
+        .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
+        .select(col("nbr").as("node"), col("m.lbl").as("lbl"))
+    }
+    labels.groupBy(col("lbl").as("community"))
+      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"),
+        max(col("node")).as("max_node"))
+  }
 
   /** Label-propagation communities over the NN-descent graph (Raghavan,
     * Albert, Kumara, "Near linear time algorithm to detect community
@@ -2610,41 +2663,17 @@ object VectorQueries {
     * visit-order dependence — the asynchronous variant's
     * nondeterminism is exactly what a distributed engine must avoid),
     * argmax as one partial-aggregable min(struct(-count, label)).
-    * Scale shape: each round is adjacency ⋈ labels on node id + two
-    * grouped aggregations — all linear in edges, no windows over
-    * node-sized partitions, and the adjacency is the memoized
-    * checkpointed q160 frame.
+    * Scale shape: the adjacency is the memoized checkpointed q160 frame,
+    * exchanged once on src and reused by every round; each later round
+    * joins it with the previous labels without an exchange and
+    * exchanges the votes once on the receiving node, where both grouped
+    * aggregations run — all linear in edges, no windows over node-sized
+    * partitions, no persisted round. See [[lpCommunities]]. A steady
+    * sf0.001 pass on local[4] runs 9 stages, down from 26.
     */
   val q165 = Q("q165_knn_label_propagation",
-    (s, dir) => {
-      val edges = ndGraph(s, dir)
-      val adj = edges.select("src", "nbr")
-        .union(edges.select(col("nbr").as("src"), col("src").as("nbr")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var labels = ndEn(s, dir).select(col("vec_id").as("node"), col("vec_id").as("lbl"))
-      var prevGen: Option[DataFrame] = None
-      for (_ <- 1 to LpRounds) {
-        val next = adj
-          .join(labels.select(col("node").as("nbr"), col("lbl")), "nbr")
-          .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
-          .groupBy(col("src"))
-          .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
-          .select(col("src").as("node"), col("m.lbl").as("lbl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // one live generation: materialize, then drop the superseded one
-        next.count()
-        prevGen.foreach(_.unpersist())
-        prevGen = Some(next)
-        labels = next
-      }
-      // final labels are materialized; the adjacency has no further reader
-      adj.unpersist()
-      labels.groupBy(col("lbl").as("community"))
-        .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"),
-          max(col("node")).as("max_node"))
-        .transform(graft.Q.presentSorted(_, "community"))
-    },
+    (s, dir) => lpCommunities(ndGraph(s, dir))
+      .transform(graft.Q.presentSorted(_, "community")),
     Some {
       val hashFold =
         "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -2717,7 +2746,7 @@ object VectorQueries {
     })
 
   // --------------------------------------------------------------- q166
-  private val InsB = 32 // audited insert batch size
+  private[vec] val InsB = 32 // audited insert batch size
 
   /** Incremental graph-index insertion audit — the MAINTENANCE leg of
     * the graph stack (q160 builds, q161 serves, q165 clusters, q166
@@ -3011,8 +3040,8 @@ object VectorQueries {
   // (16,2,12,4) 0.948 at 2× the build cost of rounds=1.
   private val ClK = 16     // learned out-degree of the clustered graph
   private val ClRounds = 1 // NN-descent refinement rounds over it
-  private val ClBeam = 12  // serving beam width
-  private val ClHops = 4   // serving hop count
+  private[vec] val ClBeam = 12  // serving beam width
+  private[vec] val ClHops = 4   // serving hop count
   private val ClRK = 6     // audited recall depth (recall@ClRK)
 
   /** One graph-ANN operating point: build degree, NN-descent refinement
@@ -3110,7 +3139,7 @@ object VectorQueries {
       .checkpoint()
   }
 
-  private def clGraph(s: SparkSession, dir: String): DataFrame =
+  private[vec] def clGraph(s: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"cl-graph:$dir") {
       ensureCkptDir(s)
       clGraphTuned(s, dir, ClK, ClRounds)

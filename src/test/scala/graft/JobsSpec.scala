@@ -28,6 +28,60 @@ class JobsSpec extends SparkTestBase {
     assert(histN === 60)
   }
 
+  /** A depth-10 synthesized recording written as parquet: `n` rows of
+    * one series, or of the two series SYN0/SYN1 when `twoSeries`.
+    */
+  private def synthesized(n: Int, twoSeries: Boolean = false): String = {
+    val dir = Files.createTempDirectory("jobs-synth").toString
+    val book = Recorder.synthesizeBook(spark.range(n).toDF("value"), depth = 10)
+    (if (twoSeries) book else book.withColumn("symbol", lit("SYN0")))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/book.parquet")
+    s"$dir/book.parquet"
+  }
+
+  test("PlotSeriesJob emits the full plot-ready frame bundle (synthesized recording)") {
+    val f = PlotSeriesJob.run(spark, synthesized(60), depth = 10, tailN = 10)
+    assert(f.series.count() === 60)
+    assert(f.series.columns.toSet.contains("ofi_ntl_k_cum"))
+    assert(f.depthCurve.count() === 20) // 10 levels × 2 sides
+    assert(f.tail.count() === 10)
+    val histN = f.spreadHist.agg(org.apache.spark.sql.functions.sum("n")).collect()(0).getLong(0)
+    assert(histN === 60)
+  }
+
+  test("PlotSeriesJob keyed series and tails equal per-symbol golden runs (synthesized recording)") {
+    val path = synthesized(120, twoSeries = true)
+    val keyed = PlotSeriesJob.run(spark, path, depth = 10, tailN = 10)
+    val cols = keyed.series.columns.filterNot(Set("exchange_id", "symbol", "_rid"))
+    def rows(df: org.apache.spark.sql.DataFrame, sym: Option[String]) =
+      sym.fold(df)(s => df.filter(col("symbol") === s)).select(cols.map(col): _*)
+        .collect().map(_.toSeq)
+    assert(keyed.series.select("symbol").distinct().count() === 2)
+    for (sym <- Seq("SYN0", "SYN1")) {
+      val one = s"${path.stripSuffix(".parquet")}-$sym.parquet"
+      spark.read.parquet(path).filter(col("symbol") === sym)
+        .coalesce(1).write.mode("overwrite").parquet(one)
+      val golden = PlotSeriesJob.run(spark, one, depth = 10, tailN = 10, golden = true)
+      val (got, want) = (rows(keyed.series, Some(sym)), rows(golden.series, None))
+      assert(got.length === 60 && got.toSeq === want.toSeq, s"series rows differ for $sym")
+      assert(rows(keyed.tail, Some(sym)).toSeq === want.takeRight(10).toSeq,
+        s"tail rows differ for $sym")
+    }
+  }
+
+  test("TwapJob: fees worsen vwap; allow_residual is a no-op; filled ≤ target (synthesized recording)") {
+    val path = synthesized(60)
+    val noFee = TwapJob.run(spark, path, "buy", 50.0, 20, 10, feeBps = 0.0)
+    val fee = TwapJob.run(spark, path, "buy", 50.0, 20, 10, feeBps = 5.0)
+    assert(noFee.summary.filled_qty > 0.0 && noFee.summary.filled_qty <= 50.0 + 1e-9)
+    assert(fee.summary.vwap > noFee.summary.vwap)
+    assert(fee.summary.vwap === noFee.summary.vwap * 1.0005 +- 1e-6)
+    val resid = TwapJob.run(spark, path, "buy", 50.0, 20, 10, feeBps = 5.0,
+      allowResidual = true)
+    assert(resid.summary.filled_qty === fee.summary.filled_qty)
+    assert(resid.summary.vwap === fee.summary.vwap)
+  }
+
   test("MetricsJob default mode shuffles by key and matches per-symbol golden runs") {
     val dir = Files.createTempDirectory("mj-multi").toString
     Recorder.synthesizeBook(spark.range(400).toDF("value"), depth = 5)

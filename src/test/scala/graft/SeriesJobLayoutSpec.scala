@@ -54,23 +54,6 @@ class SeriesJobLayoutSpec extends SparkTestBase {
     }
   }
 
-  private def withShufflePartitions(n: Int)(body: => Unit): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, before)
-  }
-
-  private def assertSameRows(label: String, got: DataFrame, want: DataFrame): Unit = {
-    assert(got.schema.map(f => f.name -> f.dataType) === want.schema.map(f => f.name -> f.dataType),
-      label)
-    val (g, w) = (got.collect(), want.collect())
-    assert(g.length === w.length, label)
-    g.indices.find(i => g(i) != w(i)).foreach { i =>
-      fail(s"$label: row $i differs\n  got  ${g(i)}\n  want ${w(i)}")
-    }
-  }
-
   private def sweep(job: (String, Boolean) => DataFrame,
                     frozen: (String, Boolean) => DataFrame): Unit =
     for (parts <- Seq(1, 4, 7)) withShufflePartitions(parts) {
