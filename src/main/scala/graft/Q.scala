@@ -2,18 +2,37 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One catalog entry: a Spark DataFrame program plus (when the semantics
-  * are ANSI-SQL-expressible) its DuckDB oracle mirror. Every float the
-  * query emits must be cross-engine-deterministic (see [[Exact]]).
+/** One catalog entry: a Spark program plus (when the semantics are
+  * ANSI-SQL-expressible) its DuckDB oracle mirror. The program is either
+  * DataFrame code or the entry's [[graft.sql.SqlSurface]] text (see
+  * [[Q.sql]]). Every float the query emits must be
+  * cross-engine-deterministic (see [[Exact]]).
   *
   * @param headline included in the Bench headline set
   */
 case class Q(name: String,
              run: (SparkSession, String) => DataFrame,
              oracle: Option[String],
-             headline: Boolean = false)
+             headline: Boolean = false) {
+
+  /** True when this entry's program is its SqlSurface text. */
+  def isText: Boolean = run.isInstanceOf[Q.Text]
+}
 
 object Q {
+
+  /** The program of an entry that *is* its SqlSurface text. */
+  final case class Text(name: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, sfDir: String): DataFrame =
+      graft.sql.SqlSurface.run(spark, sfDir, name)
+  }
+
+  /** A catalog entry whose Spark program is its SqlSurface text: where
+    * the text and a DataFrame spelling plan the same optimized and
+    * physical plan, Catalyst sees one program, so it is written once.
+    */
+  def sql(name: String, oracle: String, headline: Boolean = false): Q =
+    Q(name, Text(name), Some(oracle), headline)
 
   /** Deterministic presentation sort over an EXPENSIVE computed result.
     *

@@ -67,8 +67,7 @@ object Tables {
     * tuning constant. Values are unaffected: round-robin repartition is
     * deterministic under retries (sortBeforeRepartition, SPARK-23207)
     * and every catalog query is partition-count independent (the driver
-    * re-runs the bench at a different core count). SPARK_GRAFT_SCAN_SPREAD=0
-    * disables the floor (A/B measurement hook).
+    * re-runs the bench at a different core count).
     *
     * Gate cost/caveat: `df.rdd.getNumPartitions` physically plans the
     * scan (no job runs — ms of driver work per opted-in load), and the
@@ -79,7 +78,6 @@ object Tables {
     * parallel), noted so the gate's session-dependence is explicit.
     */
   def spread(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_SPREAD").contains("0")) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= 262144 && df.rdd.getNumPartitions < cores)

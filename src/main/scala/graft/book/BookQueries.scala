@@ -75,19 +75,8 @@ object BookQueries {
     headline = true)
 
   // ---------------------------------------------------------------- q12
-  val q12 = Q("q12_spread_flavors",
-    (s, dir) => {
-      val bb = col("best_bid"); val ba = col("best_ask")
-      bookDf(s, dir).select(col("seq"), col("sym"),
-        BookMetrics.relSpreadBpsStrict(bb, ba).as("spread_bps_strict"),
-        BookMetrics.relSpreadBpsVector(bb, ba).as("spread_bps_vector"),
-        BookMetrics.spreadBpsEvent(bb, ba).as("spread_bps_event"),
-        // S1 data-quality flags (snapshot.py:103-111 logs, we flag)
-        (bb > ba).cast("int").as("is_crossed"),
-        (bb === ba).cast("int").as("is_locked"))
-        .orderBy("seq")
-    },
-    Some(withCte(s"""
+  val q12 = Q.sql("q12_spread_flavors",
+    withCte(s"""
     SELECT seq, sym,
       ${BookSql.relSpreadBpsStrict} AS spread_bps_strict,
       ${BookSql.relSpreadBpsVector} AS spread_bps_vector,
@@ -95,7 +84,7 @@ object BookQueries {
       CAST(best_bid > best_ask AS INTEGER) AS is_crossed,
       CAST(best_bid = best_ask AS INTEGER) AS is_locked
     FROM book
-    ORDER BY seq""")))
+    ORDER BY seq"""))
 
   // ------------------------------------------------- q13/q14/q15: OFI ×3
   private def laggedCte: String = s""",
@@ -328,21 +317,12 @@ object BookQueries {
     })
 
   // ------------------------------------------------ q21: spread histogram
-  val q21 = Q("q21_spread_histogram",
-    (s, dir) => {
-      val x = BookMetrics.relSpreadBpsVector(col("best_bid"), col("best_ask"))
-      bookDf(s, dir)
-        .select(x.as("sbps"))
-        .filter(col("sbps").isNotNull)
-        .groupBy(floor(col("sbps") / lit(2.5)).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("bin")
-    },
-    Some(withCte(s""",
+  val q21 = Q.sql("q21_spread_histogram",
+    withCte(s""",
     x AS (SELECT ${BookSql.relSpreadBpsVector} AS sbps FROM book)
     SELECT CAST(floor(sbps / 2.5::DOUBLE) AS BIGINT) AS bin, COUNT(*) AS n
     FROM x WHERE sbps IS NOT NULL
-    GROUP BY bin ORDER BY bin""")))
+    GROUP BY bin ORDER BY bin"""))
 
   // ------------------------------------------- q47: bucketed range join
   /** Interval matching at scale: for every gap row (NULL mid) find the

@@ -21,14 +21,11 @@ object PlotSeriesJob {
           partitionKeys: Seq[String] = Seq("exchange_id", "symbol"),
           golden: Boolean = false): Frames = {
     // golden: single-series parity mode; default: per-key event-time windows
-    // (keys missing from the input degrade to the single-series mode)
-    val raw0 = graft.io.BookIO.readAny(spark, inPath)
-    val keys = if (golden) Seq.empty[String] else partitionKeys.filter(raw0.columns.contains)
-    val raw = (if (golden) raw0.coalesce(1) else raw0)
-      .withColumn("_rid", monotonically_increasing_id())
-    val ord = Seq(col("ts_ms").cast("long"), col("_rid"))
-    val w = if (keys.isEmpty) Window.orderBy("_rid")
-            else Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
+    // (keys missing from the input degrade to the single-series mode).
+    // Every series window runs over the layout's one spec: one sort.
+    val raw = graft.io.BookIO.readAny(spark, inPath)
+    val layout = SeriesLayout(raw, partitionKeys, golden)
+    val w = layout.spec
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     def d(c: String): Column = col(c).cast("double")
@@ -40,7 +37,7 @@ object PlotSeriesJob {
     val mid = BookMetrics.mid(bb, ba)
     val prev = lag(mid, 1).over(w)
     val retPct = when(mid > 0 && prev > 0, mid / prev - 1)
-    val base = raw
+    val base = layout.rows
       .withColumn("mid", mid)
       .withColumn("spread_bps", BookMetrics.relSpreadBpsVector(bb, ba))
       .withColumn("ofi_l1",
@@ -57,11 +54,17 @@ object PlotSeriesJob {
       .withColumn("rv", SeriesMetrics.realizedVar(col("ret"), w, rvWindow))
     val withCorr = SeriesMetrics.withRollingCorrExact(
       base, col("ofi_l1"), col("ret"), w, corrWindow, "ofi_ret_corr")
-    val seriesCols = keys ++ Seq("_rid", "ts_ms", "mid", "spread_bps", "ofi_l1", "ofi_cum",
-      "ofi_size_k", "ofi_size_k_cum", "ofi_ntl_k", "ofi_ntl_k_cum", "ret", "rv", "ofi_ret_corr")
-    val series = withCorr.select(seriesCols.map(col): _*)
-    val seriesSorted = if (keys.isEmpty) series.orderBy("_rid")
-                       else series.orderBy(keys.map(col) ++ ord: _*)
+    val seriesCols = (layout.keys ++ Seq("_rid", "ts_ms", "mid", "spread_bps", "ofi_l1",
+      "ofi_cum", "ofi_size_k", "ofi_size_k_cum", "ofi_ntl_k", "ofi_ntl_k_cum", "ret", "rv",
+      "ofi_ret_corr")).map(col)
+    val series = layout.ordered(withCorr).select(seriesCols: _*)
+
+    // W12: the last N rows of each series, in series order — the rows
+    // fewer than N before the end, counted over the same sort
+    val fromEnd = count(lit(1)).over(Window.partitionBy(layout.keys.map(col): _*)) -
+      row_number().over(w)
+    val tail = layout.ordered(withCorr.withColumn("_from_end", fromEnd)
+      .filter(col("_from_end") < tailN)).select(seriesCols: _*)
 
     // A1/A2: tidy depth curve + per-level slope
     val stackExpr = (1 to depth).flatMap(k =>
@@ -77,7 +80,8 @@ object PlotSeriesJob {
       .orderBy("side", "level")
 
     // A7: 60-bin spread histogram over the observed range
-    val s60 = base.filter(col("spread_bps").isNotNull)
+    val s60 = raw.select(BookMetrics.relSpreadBpsVector(bb, ba).as("spread_bps"))
+      .filter(col("spread_bps").isNotNull)
     val mm = s60.agg(min("spread_bps"), max("spread_bps")).collect()(0)
     val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
     val binW = if (hi > lo) (hi - lo) / 60.0 else 1.0
@@ -86,17 +90,6 @@ object PlotSeriesJob {
       .groupBy("bin").agg(count(lit(1)).as("n"))
       .orderBy("bin")
 
-    // W12: last-N window re-sorted ascending — per key in partitioned mode
-    // (row_number over a desc window, no global limit bottleneck)
-    val tail =
-      if (keys.isEmpty) series.orderBy(desc("_rid")).limit(tailN).orderBy("_rid")
-      else {
-        val wDesc = Window.partitionBy(keys.map(col): _*)
-          .orderBy(col("ts_ms").cast("long").desc, col("_rid").desc)
-        series.withColumn("_rn", row_number().over(wDesc))
-          .filter(col("_rn") <= tailN).drop("_rn")
-          .orderBy(keys.map(col) ++ ord: _*)
-      }
-    Frames(seriesSorted, depthCurve, spreadHist, tail)
+    Frames(series, depthCurve, spreadHist, tail)
   }
 }

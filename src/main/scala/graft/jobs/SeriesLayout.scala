@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Row layout shared by the per-series window jobs ([[MetricsJob]],
-  * [[EventMetricsJob]]): every series is sorted exactly once.
+  * [[EventMetricsJob]], [[PlotSeriesJob]]): every series is sorted
+  * exactly once.
   *
   * Keyed (the default): `_rid` is assigned before any exchange (input
   * order, the tie-break for duplicate timestamps), `_ts = ts_ms` as a
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   * unpartitioned window ordered by `_rid`.
   */
 private[jobs] final class SeriesLayout private (
-    val rows: DataFrame, val spec: WindowSpec, order: Seq[Column]) {
+    val keys: Seq[String], val rows: DataFrame, val spec: WindowSpec, order: Seq[Column]) {
 
   /** `df` — `rows` plus projections and windows over [[spec]] — in output order. */
   def ordered(df: DataFrame): DataFrame = df.orderBy(order: _*)
@@ -31,15 +32,16 @@ private[jobs] final class SeriesLayout private (
 private[jobs] object SeriesLayout {
 
   def apply(raw: DataFrame, partitionKeys: Seq[String], golden: Boolean): SeriesLayout = {
-    val keys = if (golden) Nil else partitionKeys.filter(raw.columns.contains).map(col)
+    val names = if (golden) Nil else partitionKeys.filter(raw.columns.contains)
+    val keys = names.map(col)
     val withRid =
       (if (golden) raw.coalesce(1) else raw).withColumn("_rid", monotonically_increasing_id())
-    if (keys.isEmpty) new SeriesLayout(withRid, Window.orderBy("_rid"), Seq(col("_rid")))
+    if (keys.isEmpty) new SeriesLayout(Nil, withRid, Window.orderBy("_rid"), Seq(col("_rid")))
     else {
       val parts = raw.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val rows = withRid.withColumn("_ts", col("ts_ms").cast("long"))
         .repartitionByRange(parts, keys: _*)
-      new SeriesLayout(rows, Window.partitionBy(keys: _*).orderBy("_ts", "_rid"),
+      new SeriesLayout(names, rows, Window.partitionBy(keys: _*).orderBy("_ts", "_rid"),
         keys ++ Seq(col("_ts"), col("_rid")))
     }
   }

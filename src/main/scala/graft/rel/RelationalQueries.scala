@@ -50,22 +50,8 @@ object RelationalQueries {
     t
   }
 
-  val q01 = Q("q01_pricing_summary",
-    (s, dir) => {
-      graft.functions.DecSum.ensureRegistered(s)
-      Tables(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          Exact.sumExactFast(col("l_quantity"), 2).as("sum_qty"),
-          Exact.sumExactFast(col("l_extendedprice"), 2).as("sum_base_price"),
-          Exact.sumExactRFast(disc, 4, 2).as("sum_disc_price"),
-          Exact.sumExactRFast(disc * (lit(1) + col("l_tax")), 6, 2).as("sum_charge"),
-          Exact.avgExactFast(col("l_quantity"), 2).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-    Some(s"""SELECT l_returnflag, l_linestatus,
+  val q01 = Q.sql("q01_pricing_summary",
+    s"""SELECT l_returnflag, l_linestatus,
       ${Exact.sumExactSql("l_quantity", 2)} AS sum_qty,
       ${Exact.sumExactSql("l_extendedprice", 2)} AS sum_base_price,
       ${Exact.sumExactRSql(discSql, 4, 2)} AS sum_disc_price,
@@ -75,25 +61,11 @@ object RelationalQueries {
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus"""),
+    ORDER BY l_returnflag, l_linestatus""",
     headline = true)
 
-  val q02 = Q("q02_top_revenue_orders",
-    (s, dir) => {
-      val c = Tables(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables(s, dir, "orders").filter(col("o_orderdate") < lit("1997-06-01"))
-      val l = Tables(s, dir, "lineitem").filter(col("l_shipdate") > lit("1997-06-01"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(Exact.sumExactRFast(disc, 4, 2).as("revenue"))
-        .select(col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
-          col("revenue"))
-        .orderBy(desc("revenue"), col("o_orderkey"))
-        .limit(10)
-    },
-    Some(s"""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+  val q02 = Q.sql("q02_top_revenue_orders",
+    s"""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
       ${Exact.sumExactRSql(discSql, 4, 2)} AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
@@ -103,29 +75,11 @@ object RelationalQueries {
       AND l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
     GROUP BY o_orderkey, o_orderdate
     ORDER BY revenue DESC, o_orderkey
-    LIMIT 10"""),
+    LIMIT 10""",
     headline = true)
 
-  val q03 = Q("q03_region_revenue",
-    (s, dir) => {
-      val l = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1997-01-01") && col("o_orderdate") < lit("1998-01-01"))
-      val c = Tables(s, dir, "customer")
-      val sup = Tables(s, dir, "supplier")
-      val n = Tables(s, dir, "nation")
-      val r = Tables(s, dir, "region").filter(col("r_name").isin("ASIA", "EUROPE"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(Exact.sumExactRFast(disc, 4, 2).as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy("r_name", "n_name")
-    },
-    Some(s"""SELECT r_name, n_name, ${Exact.sumExactRSql(discSql, 4, 2)} AS revenue,
+  val q03 = Q.sql("q03_region_revenue",
+    s"""SELECT r_name, n_name, ${Exact.sumExactRSql(discSql, 4, 2)} AS revenue,
       COUNT(*) AS n_items
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
@@ -137,7 +91,7 @@ object RelationalQueries {
       AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       AND r_name IN ('ASIA', 'EUROPE')
     GROUP BY r_name, n_name
-    ORDER BY r_name, n_name"""),
+    ORDER BY r_name, n_name""",
     headline = true)
 
   val q04 = Q("q04_active_segment_stats",
@@ -175,23 +129,13 @@ object RelationalQueries {
     GROUP BY n_name
     ORDER BY n_name"""))
 
-  val q06 = Q("q06_rollup_lineitem",
-    (s, dir) => {
-      Tables(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), Exact.sumExactFast(col("l_quantity"), 2).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("n"), col("sum_qty"))
-        .orderBy("rflag", "lstatus")
-    },
-    Some(s"""SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
+  val q06 = Q.sql("q06_rollup_lineitem",
+    s"""SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
       COALESCE(l_linestatus, 'ALL') AS lstatus,
       COUNT(*) AS n, ${Exact.sumExactSql("l_quantity", 2)} AS sum_qty
     FROM lineitem
     GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    ORDER BY rflag, lstatus"""))
+    ORDER BY rflag, lstatus""")
 
   val q07 = Q("q07_customer_running_spend",
     (s, dir) => {
@@ -318,22 +262,13 @@ object RelationalQueries {
     * oracle is the window-rank formulation, proving the two agree
     * exactly.
     */
-  val q56 = Q("q56_topk_typed_agg",
-    (s, dir) => {
-      graft.functions.ExactTopK.ensureRegistered(s)
-      Tables(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(expr("exact_topk(o_totalprice, 5)").as("topk"))
-        .select(col("o_orderpriority"), posexplode(col("topk")).as(Seq("pos0", "price")))
-        .select(col("o_orderpriority"), (col("pos0") + 1).cast("long").as("rnk"), col("price"))
-        .orderBy("o_orderpriority", "rnk")
-    },
-    Some("""WITH r AS (
+  val q56 = Q.sql("q56_topk_typed_agg",
+    """WITH r AS (
       SELECT o_orderpriority, o_totalprice,
         ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk
       FROM orders)
     SELECT o_orderpriority, rnk, o_totalprice AS price
-    FROM r WHERE rnk <= 5 ORDER BY o_orderpriority, rnk"""))
+    FROM r WHERE rnk <= 5 ORDER BY o_orderpriority, rnk""")
 
   val q10 = Q("q10_top_orders_per_customer",
     (s, dir) => {
@@ -605,50 +540,26 @@ object RelationalQueries {
     JOIN (SELECT * FROM qq WHERE pct = 95) q95 ON q95.g = kmo.g
     ORDER BY l_returnflag"""))
 
-  val q43 = Q("q43_cube_lineitem",
-    (s, dir) => {
-      Tables(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), Exact.sumExactFast(col("l_quantity"), 2).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("n"), col("sum_qty"))
-        .orderBy("rflag", "lstatus")
-    },
-    Some(s"""SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
+  val q43 = Q.sql("q43_cube_lineitem",
+    s"""SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
       COALESCE(l_linestatus, 'ALL') AS lstatus,
       COUNT(*) AS n, ${Exact.sumExactSql("l_quantity", 2)} AS sum_qty
     FROM lineitem
     GROUP BY CUBE(l_returnflag, l_linestatus)
-    ORDER BY rflag, lstatus"""))
+    ORDER BY rflag, lstatus""")
 
   /** TPC-H Q14-ish: promo revenue share by brand — conditional decimal
     * aggregation + broadcast dimension join; touches the `part` table.
     */
-  val q45 = Q("q45_promo_revenue_share",
-    (s, dir) => {
-      val l = Tables(s, dir, "lineitem")
-      val p = Tables(s, dir, "part")
-      val promo = when(col("p_type").startsWith("PROMO"), disc).otherwise(lit(0.0))
-      l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(
-          count(lit(1)).as("n_items"),
-          Exact.sumExactRFast(disc, 4, 2).as("revenue"),
-          Exact.sumExactRFast(promo, 4, 2).as("promo_revenue"))
-        .withColumn("promo_share",
-          when(col("revenue") =!= 0, col("promo_revenue") / col("revenue")))
-        .orderBy("p_brand")
-    },
-    Some(s"""SELECT p_brand, COUNT(*) AS n_items,
+  val q45 = Q.sql("q45_promo_revenue_share",
+    s"""SELECT p_brand, COUNT(*) AS n_items,
       ${Exact.sumExactRSql(discSql, 4, 2)} AS revenue,
       ${Exact.sumExactRSql(s"CASE WHEN p_type LIKE 'PROMO%' THEN $discSql ELSE 0.0::DOUBLE END", 4, 2)} AS promo_revenue,
       CASE WHEN ${Exact.sumExactRSql(discSql, 4, 2)} != 0
            THEN ${Exact.sumExactRSql(s"CASE WHEN p_type LIKE 'PROMO%' THEN $discSql ELSE 0.0::DOUBLE END", 4, 2)}
                 / ${Exact.sumExactRSql(discSql, 4, 2)} END AS promo_share
     FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_brand ORDER BY p_brand"""))
+    GROUP BY p_brand ORDER BY p_brand""")
 
   /** Pivot: per-returnflag counts and exact sums spread over linestatus
     * columns (explicit value list keeps the schema static — the form that
@@ -732,24 +643,8 @@ object RelationalQueries {
     * bucket → stats); the second input is one row per DISTINCT key, so
     * the planner costs one pass over the fact table regardless of skew.
     */
-  val q111 = Q("q111_skew_planner",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem")
-      val perKey = li.groupBy("l_suppkey").agg(count(lit(1)).as("cnt"))
-      val tot = perKey.agg(sum("cnt").as("n_total"))
-      perKey
-        .groupBy(length(bin(col("cnt"))).cast("long").as("log2_bucket"))
-        .agg(count(lit(1)).as("n_keys"),
-          sum("cnt").as("n_rows"),
-          max("cnt").as("max_cnt"))
-        .crossJoin(broadcast(tot))
-        .select(col("log2_bucket"), col("n_keys"), col("n_rows"),
-          expr("n_rows * 1000 div n_total").as("share_permille"),
-          col("max_cnt"),
-          expr("(max_cnt + 999) div 1000").as("salt_factor"))
-        .orderBy("log2_bucket")
-    },
-    Some("""WITH pk AS (
+  val q111 = Q.sql("q111_skew_planner",
+    """WITH pk AS (
       SELECT l_suppkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_suppkey
     ), t AS (
       SELECT CAST(SUM(cnt) AS BIGINT) AS n_total FROM pk
@@ -763,7 +658,7 @@ object RelationalQueries {
     SELECT b.log2_bucket, b.n_keys, b.n_rows,
       b.n_rows * 1000 // t.n_total AS share_permille,
       b.max_cnt, (b.max_cnt + 999) // 1000 AS salt_factor
-    FROM b, t ORDER BY b.log2_bucket"""))
+    FROM b, t ORDER BY b.log2_bucket""")
 
   // --------------------------------------------------------------- q116
   /** Hybrid hot/cold skew join — the production answer when one join

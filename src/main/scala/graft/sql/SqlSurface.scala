@@ -2,26 +2,32 @@ package graft.sql
 
 import graft.Tables
 import graft.book.{BookSql, SyntheticBook}
+import graft.text.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.functions.col
 
 /** User-facing Spark-SQL surface for the engine.
   *
-  * Until round 12 the engine's SQL texts existed only as DuckDB oracle
-  * mirrors; a user had to write DataFrame code. This object makes the
-  * engine SQL-first-usable:
-  *
-  *   - [[registerViews]] registers every testdata table (TESTDATA.md)
-  *     plus the derived order-book (`book`, [[SyntheticBook]]) as temp
-  *     views, and registers the native kernel functions — so
+  *   - [[texts]] carries a Spark-SQL text per catalog query, each
+  *     producing EXACTLY the catalog query's output. Where a text and its
+  *     DataFrame spelling planned the same optimized and physical plan,
+  *     the catalog entry *is* the text ([[graft.Q.sql]]); every other
+  *     text is pinned row-for-row against its DataFrame program by
+  *     SqlSurfaceSpec (doubles bit-for-bit).
+  *   - [[run]] parses a text, registers only the views it reads (see
+  *     [[viewsRead]]) from one map of view name → frame, and runs it.
+  *     The views are the ten testdata tables (TESTDATA.md), the derived
+  *     order book (`book`, [[SyntheticBook]]) and the dedup-graph views
+  *     over TextQueries' memos (`dedup_edges`, `dedup_components`,
+  *     `dedup_scored`, `dedup_components_{700,800,900}`).
+  *   - [[registerViews]] registers the tables plus `book` for a user's
+  *     own SQL. Both register the native kernel functions, so
   *     `dec_unscaled`/`unscaled_dbl` (exact float aggregation),
   *     `shingle_agg`/`minhash_spans` (text), `ord_dot` (vectors) are all
   *     callable from plain SQL.
-  *   - [[texts]] carries Spark-SQL texts for a representative catalog
-  *     slice — the §2.2 row-metrics bundle, spread flavors, OFI, realized
-  *     variance, OHLC bars, the TPC-H-ish join/agg family, rollup, exact
-  *     dedup, and a native-kernel text query — each producing EXACTLY the
-  *     catalog query's output (SqlSurfaceSpec pins row-for-row equality,
-  *     doubles bit-for-bit).
   *
   * Dialect note: the book fragments live in [[BookSql]] in DuckDB
   * spelling so the oracle gate can run them; the only divergence is the
@@ -33,14 +39,7 @@ object SqlSurface {
 
   private val D = 5
 
-  /** Register the ten testdata tables + the derived `book` as temp views
-    * and ensure every native kernel is in the session's FunctionRegistry.
-    * Idempotent; call once per (session, sfDir).
-    */
-  def registerViews(spark: SparkSession, sfDir: String): Unit = {
-    Tables.names.foreach { t =>
-      Tables(spark, sfDir, t).createOrReplaceTempView(t)
-    }
+  private def registerKernels(spark: SparkSession): Unit = {
     graft.functions.TextKernels.ensureRegistered(spark)
     graft.functions.DeepBookAgg.ensureRegistered(spark)
     graft.functions.RollingHash.ensureRegistered(spark)
@@ -53,38 +52,54 @@ object SqlSurface {
     graft.functions.JaroWinkler.ensureRegistered(spark)
     graft.functions.LevBytes.ensureRegistered(spark)
     graft.functions.AHashBands.ensureRegistered(spark)
-    SyntheticBook.fromEvents(Tables(spark, sfDir, "events"), D)
-      .createOrReplaceTempView("book")
-    // dedup_components is NOT registered here: its first materialization
-    // runs the whole LSH + CC machinery, which a q01 user never needs —
-    // [[run]] registers it on demand (or call [[registerDedupComponents]]
-    // directly before issuing your own dedup SQL).
   }
 
-  /** Register `dedup_components(doc_id, group_id)` (memoized per
-    * session + sfDir; see [[dedupComponents]]).
-    */
-  def registerDedupComponents(spark: SparkSession, sfDir: String): Unit =
-    dedupComponents(spark, sfDir).createOrReplaceTempView("dedup_components")
+  private val baseViews: Seq[String] = Tables.names :+ "book"
 
-  /** Register `dedup_edges(id_a, id_b)` — the verified near-dup edge
-    * set (memoized + checkpointed per session + sfDir), for SQL that
-    * consumes the graph itself (q177 triangles) rather than its labels.
+  /** Every view a text may read, by name. The dedup views are the
+    * DataFrame catalog's own memos (one LSH + CC build per session and
+    * sfDir serves both spellings); only the first read of one builds it.
     */
-  def registerDedupEdges(spark: SparkSession, sfDir: String): Unit =
-    dedupEdges(spark, sfDir).createOrReplaceTempView("dedup_edges")
+  private val views: Map[String, (SparkSession, String) => DataFrame] = {
+    type View = (SparkSession, String) => DataFrame
+    val tables = Tables.names.map(t => t -> ((s, dir) => Tables(s, dir, t)): (String, View))
+    val sweep = Seq(700, 800, 900).map(t =>
+      s"dedup_components_$t" -> ((s, dir) => dedupComponentsTau(s, dir, t)): (String, View))
+    (tables ++ sweep).toMap ++ Map[String, View](
+      "book" -> ((s, dir) => SyntheticBook.fromEvents(Tables(s, dir, "events"), D)),
+      "dedup_edges" -> TextQueries.dedupEdges,
+      "dedup_components" -> ((s, dir) =>
+        TextQueries.dedupGroups(s, dir).select(col("doc_id"), col("comp").as("group_id"))),
+      "dedup_scored" -> TextQueries.scoredPairs)
+  }
 
-  /** MinHash-LSH verified near-dup EDGES, written in plain Spark SQL over
-    * the registered kernels (`minhash_spans` signatures → 4×4 banding →
-    * hot-bucket-guarded band self-join → exact `shingle_overlap` Jaccard
-    * ≥ 0.8) — the SQL spelling of `TextQueries.dedupCandidates/
-    * scoredPairs`, step for step, including the ≤256 hot-bucket star
-    * fallback.
+  /** Register the ten testdata tables + the derived `book` as temp views
+    * and ensure every native kernel is in the session's FunctionRegistry.
+    * Idempotent; call once per (session, sfDir).
     */
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
+    registerKernels(spark)
+    baseViews.foreach(v => views(v)(spark, sfDir).createOrReplaceTempView(v))
+  }
+
+  /** The relation names a SQL text reads: every table reference in the
+    * parsed plan, including those inside CTE bodies and subquery
+    * expressions, minus the names the text defines as CTEs.
+    */
+  private[graft] def viewsRead(sql: String): Set[String] = {
+    def walk(p: LogicalPlan): Seq[LogicalPlan] = p.flatMap { n =>
+      n +: (n.innerChildren.collect { case c: LogicalPlan => c } ++ n.subqueries).flatMap(walk)
+    }
+    val nodes = walk(CatalystSqlParser.parsePlan(sql))
+    val ctes = nodes.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }.flatten
+    nodes.collect { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") }
+      .toSet -- ctes
+  }
+
   /** The LSH candidate-generation CTE chain (`sig`/`bh4`/`bands`/`cand`)
-    * shared by [[dedupEdgeSql]] and the q102 calibration text: 16-span
-    * MinHash signatures → 4×4 banding → hot-bucket-guarded band
-    * self-join, exactly TextQueries.dedupCandidates.
+    * shared by the q81, q102 and q122 texts: 16-span MinHash signatures
+    * → 4×4 banding → hot-bucket-guarded band self-join, exactly
+    * TextQueries.dedupCandidates.
     */
   private val candChainSql: String = {
     val bandCols = (0 to 3).map { k =>
@@ -114,81 +129,17 @@ object SqlSurface {
     )"""
   }
 
-  private val dedupEdgeSql: String =
-    s"""WITH $candChainSql, scored AS (
-      SELECT c.id_a, c.id_b, shingle_overlap(a.text, b.text, 8) AS ov
-      FROM cand c
-      JOIN documents a ON a.doc_id = c.id_a
-      JOIN documents b ON b.doc_id = c.id_b
-    )
-    SELECT id_a, id_b FROM scored
-    WHERE ov.n_union > 0 AND CAST(ov.n_inter AS DOUBLE) / ov.n_union >= 0.8D"""
-
-  /** `dedup_components(doc_id, group_id)` — the q48/q51 group labels for
-    * the SQL surface. The verified edge set is computed by
-    * [[dedupEdgeSql]] (pure SQL over the kernels); the one step SQL
-    * cannot express is the transitive closure — Spark 4's recursive CTEs
-    * support UNION ALL only, which never terminates on a cyclic edge
-    * relation — so that single step runs through the engine's
-    * distributed alternating-star connected components, exactly as the
-    * DataFrame catalog path does. Memoized + checkpointed per
-    * (session, sfDir): two longs per doc, no executor storage pinned.
-    */
-  /** The verified edge set, materialized ONCE per (session, sfDir): the
-    * LSH signature + band-join + Jaccard-verify pipeline is the
-    * expensive leg, and both the components memo and any edge-consuming
-    * SQL (q177) read it repeatedly — a checkpoint cuts the re-expansion
-    * a multiply-referenced CTE would otherwise pay.
-    */
-  private def dedupEdges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.SessionMemo.getOrCompute(spark, s"sql-dedup-edges:$sfDir") {
-      graft.util.Ckpt.ensureDir(spark.sparkContext)
-      spark.sql(dedupEdgeSql).checkpoint()
-    }
-
-  private def dedupComponents(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.SessionMemo.getOrCompute(spark, s"sql-dedup-components:$sfDir") {
-      val edges = dedupEdges(spark, sfDir)
-      val (labels, _) = graft.graph.ConnectedComponents.label(
-        edges, Tables(spark, sfDir, "documents").select("doc_id"))
-      graft.util.Ckpt.ensureDir(spark.sparkContext)
-      val out = labels.select(
-        org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("comp").as("group_id")).checkpoint()
-      labels.unpersist()
-      out
-    }
-
-  /** UNTHRESHOLDED scored candidate pairs `(id_a, id_b, n_inter,
-    * n_union)` — the q128 sweep memo: the expensive LSH + exact-overlap
-    * leg materialized once, so every verify threshold is a free integer
-    * filter over it (the TextQueries.scoredPairs shape, spelled in SQL
-    * over the kernels).
-    */
-  private def dedupScored(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.SessionMemo.getOrCompute(spark, s"sql-dedup-scored:$sfDir") {
-      graft.util.Ckpt.ensureDir(spark.sparkContext)
-      spark.sql(
-        s"""WITH $candChainSql, scored AS (
-          SELECT c.id_a, c.id_b, shingle_overlap(a.text, b.text, 8) AS ov
-          FROM cand c
-          JOIN documents a ON a.doc_id = c.id_a
-          JOIN documents b ON b.doc_id = c.id_b
-        )
-        SELECT id_a, id_b, ov.n_inter AS n_inter, ov.n_union AS n_union
-        FROM scored""").checkpoint()
-    }
-
   /** Per-threshold component labels `dedup_components_<τ‰>` for the
-    * q128 sweep: the τ‰ integer verify rule over [[dedupScored]], then
-    * the engine's distributed CC (the one step SQL cannot express — see
-    * [[dedupComponents]]). Memoized per (session, sfDir, τ).
+    * q128 sweep: the τ‰ integer verify rule over TextQueries'
+    * `scoredPairs`, then the engine's distributed CC (the one step SQL
+    * cannot express: Spark 4's recursive CTEs support UNION ALL only,
+    * which never terminates on a cyclic edge relation). Memoized per
+    * (session, sfDir, τ).
     */
   private def dedupComponentsTau(spark: SparkSession, sfDir: String,
                                  tau: Int): DataFrame =
     graft.util.SessionMemo.getOrCompute(spark, s"sql-dedup-comp-$tau:$sfDir") {
-      import org.apache.spark.sql.functions.col
-      val edges = dedupScored(spark, sfDir)
+      val edges = TextQueries.scoredPairs(spark, sfDir)
         .filter(col("n_union") > 0 &&
           col("n_inter") * 1000 >= col("n_union") * tau)
         .select("id_a", "id_b")
@@ -200,17 +151,6 @@ object SqlSurface {
       labels.unpersist()
       out
     }
-
-  /** Register the q128 sweep views: `dedup_scored` plus
-    * `dedup_components_{700,800,900}`.
-    */
-  def registerDedupSweep(spark: SparkSession, sfDir: String): Unit = {
-    dedupScored(spark, sfDir).createOrReplaceTempView("dedup_scored")
-    Seq(700, 800, 900).foreach { t =>
-      dedupComponentsTau(spark, sfDir, t)
-        .createOrReplaceTempView(s"dedup_components_$t")
-    }
-  }
 
   /** DuckDB literal-cast spelling → Spark double-literal suffix. The
     * fragments only ever use `::DOUBLE` on numeric literals.
@@ -551,7 +491,7 @@ object SqlSurface {
     "q35_label_centroids" ->
       s"""SELECT label, CAST(pos0 + 1 AS BIGINT) AS pos, COUNT(*) AS n,
         (${sumFast("CAST(x AS DOUBLE)", 8)} / COUNT(*)) AS centroid
-      FROM embeddings LATERAL VIEW posexplode(embedding) t AS pos0, x
+      FROM (SELECT label, posexplode(embedding) AS (pos0, x) FROM embeddings)
       GROUP BY label, CAST(pos0 + 1 AS BIGINT)
       ORDER BY label, pos""",
 
@@ -2405,11 +2345,9 @@ object SqlSurface {
       FROM m ORDER BY seq"""
     },
 
-    // MinHash-LSH dedup over the on-demand dedup_components view: the
-    // candidate generation + Jaccard verify run as SQL over the
-    // minhash_spans / shingle_overlap kernels (see dedupEdgeSql); only
-    // the transitive closure itself comes from the engine's distributed
-    // connected components.
+    // MinHash-LSH dedup over the dedup_components view: the group labels
+    // of the catalog's own dedup memo (LSH candidates, Jaccard verify and
+    // the distributed connected components, built once per session)
     "q48_minhash_lsh_dedup" ->
       s"""SELECT c.doc_id, c.group_id,
         CAST(c.doc_id = c.group_id AS INT) AS is_kept, gs.group_size
@@ -4476,10 +4414,11 @@ object SqlSurface {
       s"""WITH t AS (
         SELECT o_orderpriority, exact_topk(o_totalprice, 5) AS topk
         FROM orders GROUP BY o_orderpriority
+      ), e AS (
+        SELECT o_orderpriority, posexplode(topk) AS (pos0, price) FROM t
       )
       SELECT o_orderpriority, CAST(pos0 + 1 AS BIGINT) AS rnk, price
-      FROM t LATERAL VIEW posexplode(topk) AS pos0, price
-      ORDER BY o_orderpriority, rnk""",
+      FROM e ORDER BY o_orderpriority, rnk""",
 
     // bucketed band range-join (probe joins 3 adjacent 1-hour buckets —
     // an equi-join Catalyst can hash — then the exact band filter)
@@ -4692,8 +4631,8 @@ object SqlSurface {
 
     // dedup verify-threshold sweep: each τ‰ is a free integer filter
     // over the one dedup_scored memo; the per-τ transitive closures run
-    // through the engine's distributed CC as registered views (the same
-    // delegation as dedup_components — see registerDedupSweep)
+    // through the engine's distributed CC as registered views (see
+    // dedupComponentsTau)
     "q128_dedup_threshold_sweep" -> {
       def leg(t: Int) =
         s"""g$t AS (
@@ -4713,35 +4652,15 @@ object SqlSurface {
       ORDER BY tau_permille"""
     })
 
-  /** Queries whose texts read the on-demand dedup views. View
-    * materialization is keyed off these EXPLICIT lists, not a substring
-    * probe of the SQL (which a comment mention would false-trigger into
-    * the full LSH + connected-components build). SqlSurfaceSpec asserts
-    * the lists against the texts, so a new text that references a view
-    * without registering here fails the suite rather than the query.
+  /** Run one surface query end-to-end: register the views it reads,
+    * execute the text.
     */
-  private[graft] val needsDedupComponents: Set[String] = Set(
-    "q48_minhash_lsh_dedup", "q51_dedup_keep_longest", "q70_curation_funnel",
-    "q73_split_leakage", "q85_contrastive_pairs", "q91_hard_negatives",
-    "q104_canonical_rank", "q105_quality_dup_lift", "q106_filter_overlap",
-    "q114_dedup_pagerank", "q126_dedup_topology", "q150_release_gate",
-    "q156_group_split_assign", "q177_dup_graph_triangles")
-
-  private[graft] val needsDedupEdges: Set[String] = Set(
-    "q104_canonical_rank", "q114_dedup_pagerank", "q126_dedup_topology",
-    "q177_dup_graph_triangles")
-
-  private[graft] val needsDedupSweep: Set[String] =
-    Set("q128_dedup_threshold_sweep")
-
-  /** Run one surface query end-to-end: register views, execute the text. */
   def run(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val sql = texts.getOrElse(name, sys.error(
       s"unknown SQL-surface query '$name' (${texts.size} texts known)"))
-    registerViews(spark, sfDir)
-    if (needsDedupComponents(name)) registerDedupComponents(spark, sfDir)
-    if (needsDedupEdges(name)) registerDedupEdges(spark, sfDir)
-    if (needsDedupSweep(name)) registerDedupSweep(spark, sfDir)
+    registerKernels(spark)
+    viewsRead(sql).foreach(v =>
+      views.get(v).foreach(_(spark, sfDir).createOrReplaceTempView(v)))
     spark.sql(sql)
   }
 }

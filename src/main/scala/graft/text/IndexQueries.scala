@@ -140,37 +140,8 @@ object IndexQueries {
     * per-lang rollup of 5 rows. Chunk text never leaves the map side:
     * md5 reduces each chunk to 32 bytes before the exchange.
     */
-  val q120 = Q("q120_chunk_overlap_audit",
-    (s, dir) => {
-      val win = 256
-      val stride = 192
-      val nChunks = expr(
-        s"CASE WHEN n_chars <= $win THEN 0 ELSE (n_chars - $win + ${stride - 1}) div $stride END")
-      val chunks = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
-          explode(sequence(lit(0), nChunks.cast("int"))).as("k"))
-        .withColumn("chunk", expr(s"substring(text, k * $stride + 1, $win)"))
-        .drop("text")
-      val perDoc = chunks.groupBy("doc_id", "lang", "n_chars")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(length(col("chunk"))).as("cchars"),
-          md5(concat_ws("",
-            transform(array_sort(collect_list(struct(col("k"), md5(col("chunk").cast("binary")).as("h")))),
-              x => x.getField("h"))).cast("binary")).as("doc_chunks_md5"))
-      perDoc.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chunks").as("n_chunks"),
-          sum("cchars").as("chunk_chars"),
-          sum(col("cchars") - col("n_chars")).as("overlap_chars"),
-          expr("sum(cchars - n_chars) * 1000 div sum(n_chars)").as("overlap_permille"),
-          md5(concat_ws("",
-            transform(array_sort(collect_list(struct(col("doc_id"), col("doc_chunks_md5").as("h")))),
-              x => x.getField("h"))).cast("binary")).as("lang_md5"))
-        .select("lang", "n_docs", "n_chunks", "chunk_chars", "overlap_chars",
-          "overlap_permille", "lang_md5")
-        .orderBy("lang")
-    },
-    Some("""WITH ks AS (
+  val q120 = Q.sql("q120_chunk_overlap_audit",
+    """WITH ks AS (
       SELECT doc_id, lang, n_chars, text,
         unnest(generate_series(0,
           CASE WHEN n_chars <= 256 THEN 0 ELSE (n_chars - 256 + 191) // 192 END)) AS k
@@ -192,7 +163,7 @@ object IndexQueries {
       CAST(SUM(cchars - n_chars) AS BIGINT) * 1000
         // CAST(SUM(n_chars) AS BIGINT) AS overlap_permille,
       md5(string_agg(doc_chunks_md5, '' ORDER BY doc_id)) AS lang_md5
-    FROM perdoc GROUP BY lang ORDER BY lang"""))
+    FROM perdoc GROUP BY lang ORDER BY lang""")
 
   // --------------------------------------------------------------- q121
   /** DSIR-style importance scoring (Xie et al., "Data Selection for

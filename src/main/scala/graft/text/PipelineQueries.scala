@@ -1556,27 +1556,8 @@ object PipelineQueries {
     * √counts (source-ascending, prepended 0 — same adds, same order
     * in both engines), the one scalar a 100 TB corpus would broadcast.
     */
-  val q90 = Q("q90_mixture_weights",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val cnt = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
-      val denoms = cnt.agg(
-        sum("n_docs").as("n_total"),
-        aggregate(
-          transform(
-            array_sort(collect_list(struct(col("source"),
-              sqrt(col("n_docs").cast("double")).as("sq")))),
-            x => x.getField("sq")),
-          lit(0.0), (a, x) => a + x).as("denom"))
-      cnt.crossJoin(broadcast(denoms))
-        .withColumn("p_natural", col("n_docs").cast("double") / col("n_total"))
-        .withColumn("w_temp", sqrt(col("n_docs").cast("double")) / col("denom"))
-        .withColumn("quota_100k", floor(col("w_temp") * 100000).cast("long"))
-        .withColumn("boost", col("w_temp") / col("p_natural"))
-        .select("source", "n_docs", "p_natural", "w_temp", "quota_100k", "boost")
-        .orderBy("source")
-    },
-    Some("""WITH cnt AS (
+  val q90 = Q.sql("q90_mixture_weights",
+    """WITH cnt AS (
       SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
     ), d AS (
       SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total,
@@ -1593,7 +1574,7 @@ object PipelineQueries {
     SELECT source, n_docs, p_natural, w_temp,
       CAST(floor(w_temp * 100000) AS BIGINT) AS quota_100k,
       w_temp / p_natural AS boost
-    FROM w ORDER BY source"""))
+    FROM w ORDER BY source""")
 
   // ---------------------------------------------------------------- q91
   /** Hard-negative mining for retrieval training — for each anchor
@@ -1911,25 +1892,8 @@ object PipelineQueries {
     * against the counts, then a partial-aggregable per-ctx fold; the
     * loss fraction is a single IEEE division of exact longs.
     */
-  val q98 = Q("q98_truncation_curve",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val nt = docs.select(
-        when(length(trim(col("text"))) === 0, lit(0L))
-          .otherwise(size(toks).cast("long")).as("n_toks"))
-      nt.select(col("n_toks"),
-          explode(array(Seq(128, 256, 512, 1024).map(c => lit(c.toLong)): _*)).as("ctx"))
-        .groupBy("ctx")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("n_toks") > col("ctx"), 1L).otherwise(0L)).as("n_truncated"),
-          sum(least(col("n_toks"), col("ctx"))).as("toks_kept"),
-          sum(greatest(col("n_toks") - col("ctx"), lit(0L))).as("toks_lost"))
-        .withColumn("loss_frac",
-          when(col("toks_kept") + col("toks_lost") > 0,
-            col("toks_lost").cast("double") / (col("toks_kept") + col("toks_lost"))))
-        .orderBy("ctx")
-    },
-    Some(s"""WITH nt AS (
+  val q98 = Q.sql("q98_truncation_curve",
+    s"""WITH nt AS (
       SELECT CASE WHEN length(trim(text)) = 0 THEN 0
                   ELSE len($toksSql) END AS n_toks
       FROM documents
@@ -1945,7 +1909,7 @@ object PipelineQueries {
     SELECT ctx, n_docs, n_truncated, toks_kept, toks_lost,
       CASE WHEN toks_kept + toks_lost > 0
            THEN CAST(toks_lost AS DOUBLE) / (toks_kept + toks_lost) END AS loss_frac
-    FROM agg ORDER BY ctx"""))
+    FROM agg ORDER BY ctx""")
 
   // --------------------------------------------------------------- q101
   /** Curriculum training order — materialize the easy→hard round-robin
@@ -2461,8 +2425,7 @@ object PipelineQueries {
   /** Positions whose forward SaK-gram occurs ≥ 2 times anywhere in the
     * corpus — the flagged set feeding q157's islands merge — via one of
     * two value-identical plans chosen by the corpus-size guard
-    * (`SPARK_GRAFT_Q157_DOUBLE=1|0` forces either side; A/B hook, same
-    * contract as SPARK_GRAFT_SCAN_SPREAD):
+    * (`doubleMinDocs`; a caller may pass any threshold to force a side):
     *
     *   - lead-window (small corpora): materialize all SaK−1 forward
     *     ranks per position in one doc window, duplicate-half prune on
@@ -2478,17 +2441,13 @@ object PipelineQueries {
     * Equivalence: dense rank is injective on half-gram classes, so
     * (rk4 at p, rk4 at p+SaK/2) equal ⟺ the two SaK-grams are equal
     * token-for-token — the same no-hashing exactness as the rank tuple;
-    * Q157DoublingGuardSpec forces both plans and compares them
+    * LakehouseOpsSpec forces both plans and compares them
     * position-for-position.
     */
   private[graft] def q157FlaggedPositions(docs: DataFrame, nDocs: Long,
       doubleMinDocs: Long = Q157DoubleMinDocs): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val useDoubling = sys.env.get("SPARK_GRAFT_Q157_DOUBLE") match {
-      case Some("1") => true
-      case Some("0") => false
-      case _         => nDocs > doubleMinDocs
-    }
+    val useDoubling = nDocs > doubleMinDocs
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     val wLen = Window.partitionBy("doc_id")
     val half = SaK / 2

@@ -121,17 +121,10 @@ object TextQueries {
     })
 
   // ---------------------------------------------------------------- q29
-  val q29 = Q("q29_exact_dedup",
-    (s, dir) => {
-      Tables(s, dir, "documents")
-        .groupBy(md5(col("text").cast("binary")).as("fp"))
-        .agg(count(lit(1)).as("n_docs"), min("doc_id").as("keep_id"),
-          sum("n_chars").as("total_chars"))
-        .orderBy("fp")
-    },
-    Some("""SELECT md5(text) AS fp, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id,
+  val q29 = Q.sql("q29_exact_dedup",
+    """SELECT md5(text) AS fp, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id,
       CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY fp ORDER BY fp"""))
+    FROM documents GROUP BY fp ORDER BY fp""")
 
   // ---------------------------------------------------------------- q30
   val q30 = Q("q30_shingle_stats",
@@ -273,7 +266,7 @@ object TextQueries {
     * memory — every cache the computation itself takes is unpersisted
     * before returning.
     */
-  private[text] def dedupGroups(s: org.apache.spark.sql.SparkSession, dir: String)
+  private[graft] def dedupGroups(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"dedup-groups:$dir")(
       computeDedupGroups(s, dir))
@@ -347,7 +340,7 @@ object TextQueries {
     * calibration audit (q102) all derive from this ONE band-join +
     * verify pass.
     */
-  private[text] def scoredPairs(s: org.apache.spark.sql.SparkSession, dir: String)
+  private[graft] def scoredPairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"dedup-scored-pairs:$dir") {
       val docs = Tables(s, dir, "documents")
@@ -372,7 +365,7 @@ object TextQueries {
     * checkpointed [[scoredPairs]], memoized so every consumer shares
     * one plan object.
     */
-  private[text] def dedupEdges(s: org.apache.spark.sql.SparkSession, dir: String)
+  private[graft] def dedupEdges(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"dedup-edges:$dir") {
       scoredPairs(s, dir)
@@ -1076,31 +1069,8 @@ object TextQueries {
     * error against the exact count; sources with < k distinct shingles
     * yield NULL (the sketch is undefined there, not silently exact).
     */
-  val q84 = Q("q84_kmv_distinct",
-    (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
-      graft.functions.ExactTopK.ensureRegistered(s)
-      val docs = Tables(s, dir, "documents")
-      // native kernel: one loop per doc emits the distinct shingles'
-      // 48-bit md5 prefixes as longs — no shingle-string rows, no
-      // per-row md5 expression; the cross-doc distinct shuffles
-      // (source, long) pairs. Cardinality is therefore distinct-HASH
-      // count in both engines (collision odds ~N²/2⁴⁹ — negligible,
-      // and identical across engines by construction).
-      val withV = docs
-        .select(col("source"), explode(expr(s"shingle_hash48(text, $N)")).as("v"))
-        .distinct()
-      withV.groupBy("source")
-        .agg(count(lit(1)).as("n_exact"),
-          expr("exact_topk(CAST(-v AS DOUBLE), 64)").as("topneg"))
-        .withColumn("v_k", when(size(col("topneg")) >= 64,
-          (-element_at(col("topneg"), 64)).cast("long")))
-        .withColumn("kmv_est", expr("CAST((63 * 281474976710656) div v_k AS BIGINT)"))
-        .withColumn("err_permille", expr("abs(kmv_est - n_exact) * 1000 div n_exact"))
-        .select("source", "n_exact", "v_k", "kmv_est", "err_permille")
-        .orderBy("source")
-    },
-    Some(s"""WITH hv AS (
+  val q84 = Q.sql("q84_kmv_distinct",
+    s"""WITH hv AS (
       SELECT DISTINCT source,
         list_reduce(list_prepend(CAST(0 AS BIGINT),
           list_transform(generate_series(1, 12), i ->
@@ -1120,7 +1090,7 @@ object TextQueries {
       abs(CAST((63 * 281474976710656) // kv.v_k AS BIGINT) - e.n_exact) * 1000 // e.n_exact
         AS err_permille
     FROM ex e LEFT JOIN kv ON kv.source = e.source
-    ORDER BY e.source"""))
+    ORDER BY e.source""")
 
   // ---------------------------------------------------------------- q85
   /** Contrastive pair mining — the SimCSE/CLIP-style training-data op:

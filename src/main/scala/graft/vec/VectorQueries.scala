@@ -95,20 +95,12 @@ object VectorQueries {
     FROM n ORDER BY vec_id"""))
 
   // ---------------------------------------------------------------- q35
-  val q35 = Q("q35_label_centroids",
-    (s, dir) => {
-      Tables(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "x")))
-        .groupBy(col("label"), (col("pos0") + lit(1)).cast("long").as("pos"))
-        .agg(count(lit(1)).as("n"),
-          (Exact.sumExactFast(col("x").cast("double"), 8) / count(lit(1))).as("centroid"))
-        .orderBy("label", "pos")
-    },
-    Some(s"""SELECT label, pos, COUNT(*) AS n,
+  val q35 = Q.sql("q35_label_centroids",
+    s"""SELECT label, pos, COUNT(*) AS n,
       (${Exact.sumExactSql("x", 8)} / COUNT(*)) AS centroid
     FROM (SELECT label, unnest(generate_series(1, len(embedding))) AS pos,
                  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
-    GROUP BY label, pos ORDER BY label, pos"""))
+    GROUP BY label, pos ORDER BY label, pos""")
 
   // ---------------------------------------------------------------- q36
   val q36 = Q("q36_knn_bruteforce",
@@ -2401,12 +2393,12 @@ object VectorQueries {
     * each hop joins the data-sized edge table against a ≤ NdProbes·B
     * row broadcast frontier (never the reverse), and every beam/visited
     * set is bounded by construction. Each hop is one checkpointed query
-    * with one exchange on q_id ([[beamVisited]]); after the hops, the
-    * top-1 window and the visited count each exchange the final
-    * generation on q_id once more. A steady sf0.001 pass on local[4]
-    * runs 29 stages, down from 40. Deterministic: fixed entry, fixed
-    * hops, ordered-fold distances, id tie breaks — identical traversal
-    * in both engines.
+    * with one exchange on q_id ([[beamVisited]]); after the hops, one
+    * aggregation exchanges the final generation on q_id once more for
+    * both the top-1 and the visited count. A steady sf0.001 pass on
+    * local[4] runs 27 stages, down from 29. Deterministic: fixed entry,
+    * fixed hops, ordered-fold distances, id tie breaks — identical
+    * traversal in both engines.
     */
   /** Greedy beam traversal shared by q161 (search) and q166 (insert):
     * for every probe row (q_id, qe, qn2) in `probeEmb`, start at entry
@@ -2478,13 +2470,14 @@ object VectorQueries {
         s"q161_graph_beam_search needs ≥2 embeddings (found ${lo2.length})")
       val probes = en.filter(col("vec_id") < NdProbes)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("n2").as("qn2"))
-      val visited = beamVisited(probes, en, edges, lo2(0), lo2(1))
-      val wB = Window.partitionBy("q_id").orderBy(col("d2"), col("node"))
-      val best = visited
-        .withColumn("rb", row_number().over(wB))
-        .filter(col("rb") === 1)
-        .select(col("q_id"), col("node").as("beam_top1"), col("d2").as("beam_d2"))
-      val nvis = visited.groupBy("q_id").agg(count(lit(1)).as("n_visited"))
+      // one aggregation gives both the visited count and the top-1:
+      // nodes are unique per q_id, so min over (d2, node) is the first
+      // row of the (d2, node) order
+      val best = beamVisited(probes, en, edges, lo2(0), lo2(1))
+        .groupBy("q_id")
+        .agg(count(lit(1)).as("n_visited"), min(struct(col("d2"), col("node"))).as("top"))
+        .select(col("q_id"), col("top.node").as("beam_top1"), col("top.d2").as("beam_d2"),
+          col("n_visited"))
       val qx = en.filter(col("vec_id") < NdProbes)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("n2").as("qn2"))
       val exact1 = broadcast(qx)
@@ -2496,7 +2489,7 @@ object VectorQueries {
           Window.partitionBy("q_id").orderBy(col("d2"), col("c_id"))))
         .filter(col("re") === 1)
         .select(col("q_id"), col("c_id").as("exact_top1"), col("d2").as("exact_d2"))
-      exact1.join(best, "q_id").join(nvis, "q_id")
+      exact1.join(best, "q_id")
         .select(col("q_id"), col("exact_top1"), col("beam_top1"),
           (col("beam_top1") === col("exact_top1")).cast("int").as("top1_match"),
           col("n_visited"),

@@ -128,3 +128,97 @@ object FrozenEventMetricsJob {
       s"rv_event_$rvWindow")).map(col): _*)
   }
 }
+
+/** Reference implementation for [[PlotSeriesLayoutSpec]]: `PlotSeriesJob.run`
+  * as it was before it moved onto `jobs.SeriesLayout`, copied verbatim. Its
+  * series frame casts `ts_ms` under a new alias in every window, so each
+  * window sorts again, and the trailing `orderBy` range-samples the window
+  * output; its frames are the contract the single-sort layout must
+  * reproduce in order.
+  */
+object FrozenPlotSeriesJob {
+
+  def run(spark: SparkSession, inPath: String, depth: Int,
+          rvWindow: Int = 20, corrWindow: Int = 30, tailN: Int = 2000,
+          partitionKeys: Seq[String] = Seq("exchange_id", "symbol"),
+          golden: Boolean = false): graft.jobs.PlotSeriesJob.Frames = {
+    // golden: single-series parity mode; default: per-key event-time windows
+    // (keys missing from the input degrade to the single-series mode)
+    val raw0 = graft.io.BookIO.readAny(spark, inPath)
+    val keys = if (golden) Seq.empty[String] else partitionKeys.filter(raw0.columns.contains)
+    val raw = (if (golden) raw0.coalesce(1) else raw0)
+      .withColumn("_rid", monotonically_increasing_id())
+    val ord = Seq(col("ts_ms").cast("long"), col("_rid"))
+    val w = if (keys.isEmpty) Window.orderBy("_rid")
+            else Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
+    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    def d(c: String): Column = col(c).cast("double")
+    val bb = d("best_bid"); val ba = d("best_ask")
+    val bidSum = (1 to depth).map(k => coalesce(d(s"bid${k}_size"), lit(0.0))).reduce(_ + _)
+    val askSum = (1 to depth).map(k => coalesce(d(s"ask${k}_size"), lit(0.0))).reduce(_ + _)
+    def lv(s: String) = (1 to depth).map(k => (d(s"$s${k}_price"), d(s"$s${k}_size")))
+
+    val mid = BookMetrics.mid(bb, ba)
+    val prev = lag(mid, 1).over(w)
+    val retPct = when(mid > 0 && prev > 0, mid / prev - 1)
+    val base = raw
+      .withColumn("mid", mid)
+      .withColumn("spread_bps", BookMetrics.relSpreadBpsVector(bb, ba))
+      .withColumn("ofi_l1",
+        SeriesMetrics.ofiLobster(w, d("bid1_price"), d("bid1_size"), d("ask1_price"), d("ask1_size")))
+      .withColumn("ofi_cum", sum("ofi_l1").over(wRun))
+      .withColumn("bid_sz_k", bidSum).withColumn("ask_sz_k", askSum)
+      .withColumn("ofi_size_k", SeriesMetrics.depthOfi(col("bid_sz_k"), col("ask_sz_k"), w))
+      .withColumn("ofi_size_k_cum", sum("ofi_size_k").over(wRun))
+      .withColumn("bid_ntl_k", coalesce(BookMetrics.notionalDepth(lv("bid")), lit(0.0)))
+      .withColumn("ask_ntl_k", coalesce(BookMetrics.notionalDepth(lv("ask")), lit(0.0)))
+      .withColumn("ofi_ntl_k", SeriesMetrics.depthOfi(col("bid_ntl_k"), col("ask_ntl_k"), w))
+      .withColumn("ofi_ntl_k_cum", SeriesMetrics.cumsumExact(col("ofi_ntl_k"), w))
+      .withColumn("ret", retPct)
+      .withColumn("rv", SeriesMetrics.realizedVar(col("ret"), w, rvWindow))
+    val withCorr = SeriesMetrics.withRollingCorrExact(
+      base, col("ofi_l1"), col("ret"), w, corrWindow, "ofi_ret_corr")
+    val seriesCols = keys ++ Seq("_rid", "ts_ms", "mid", "spread_bps", "ofi_l1", "ofi_cum",
+      "ofi_size_k", "ofi_size_k_cum", "ofi_ntl_k", "ofi_ntl_k_cum", "ret", "rv", "ofi_ret_corr")
+    val series = withCorr.select(seriesCols.map(col): _*)
+    val seriesSorted = if (keys.isEmpty) series.orderBy("_rid")
+                       else series.orderBy(keys.map(col) ++ ord: _*)
+
+    // A1/A2: tidy depth curve + per-level slope
+    val stackExpr = (1 to depth).flatMap(k =>
+      Seq(s"'bid', $k, bid${k}_size", s"'ask', $k, ask${k}_size")).mkString(", ")
+    val depthCurve = raw
+      .selectExpr(s"stack(${2 * depth}, $stackExpr) as (side, level, size_s)")
+      .withColumn("size", col("size_s").cast("double")).drop("size_s")
+      .groupBy("side", "level")
+      .agg(count(col("size")).as("n_obs"),
+        (graft.Exact.sumExact(col("size"), 6) / count(col("size"))).as("avg_size"))
+      .withColumn("davg", col("avg_size") -
+        lag("avg_size", 1).over(Window.partitionBy("side").orderBy("level")))
+      .orderBy("side", "level")
+
+    // A7: 60-bin spread histogram over the observed range
+    val s60 = base.filter(col("spread_bps").isNotNull)
+    val mm = s60.agg(min("spread_bps"), max("spread_bps")).collect()(0)
+    val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
+    val binW = if (hi > lo) (hi - lo) / 60.0 else 1.0
+    val spreadHist = s60
+      .withColumn("bin", least(floor((col("spread_bps") - lit(lo)) / lit(binW)), lit(59L)))
+      .groupBy("bin").agg(count(lit(1)).as("n"))
+      .orderBy("bin")
+
+    // W12: last-N window re-sorted ascending — per key in partitioned mode
+    // (row_number over a desc window, no global limit bottleneck)
+    val tail =
+      if (keys.isEmpty) series.orderBy(desc("_rid")).limit(tailN).orderBy("_rid")
+      else {
+        val wDesc = Window.partitionBy(keys.map(col): _*)
+          .orderBy(col("ts_ms").cast("long").desc, col("_rid").desc)
+        series.withColumn("_rn", row_number().over(wDesc))
+          .filter(col("_rn") <= tailN).drop("_rn")
+          .orderBy(keys.map(col) ++ ord: _*)
+      }
+    graft.jobs.PlotSeriesJob.Frames(seriesSorted, depthCurve, spreadHist, tail)
+  }
+}

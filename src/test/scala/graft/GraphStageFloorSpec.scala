@@ -17,7 +17,7 @@ class GraphStageFloorSpec extends SparkTestBase {
 
   /** Measured stages per query (`local[4]`, 4 shuffle partitions) + 1. */
   private val maxStages = Seq(
-    "q161_graph_beam_search" -> 30,
+    "q161_graph_beam_search" -> 28,
     "q165_knn_label_propagation" -> 10,
     "q177_dup_graph_triangles" -> 15)
 

@@ -3,10 +3,12 @@ package graft
 import graft.sql.SqlSurface
 
 /** The user-facing SQL surface (round 12): every text in
-  * [[SqlSurface.texts]] must produce EXACTLY the catalog DataFrame
-  * query's output — same schema (names + types in order), same rows in
-  * the same presented order, doubles compared bit-for-bit (both run in
-  * Spark, so any mismatch is a fragment-drift bug, not float noise).
+  * [[SqlSurface.texts]] that is not itself a catalog entry ([[Q.sql]])
+  * must produce EXACTLY the catalog DataFrame query's output — same
+  * schema (names + types in order), same rows in the same presented
+  * order, doubles compared bit-for-bit (both run in Spark, so any
+  * mismatch is a fragment-drift bug, not float noise) — with a plan of
+  * its own.
   */
 class SqlSurfaceSpec extends SparkTestBase {
 
@@ -26,23 +28,18 @@ class SqlSurfaceSpec extends SparkTestBase {
     assert(missing.isEmpty, s"unknown names: $missing")
   }
 
-  test("dedup-view registration lists exactly match the texts that read the views") {
-    // The run() gate is an explicit per-query list; this is the guard
-    // that keeps the list true. A text that mentions a view only in a
-    // SQL comment shows up here and forces a human look — better a red
-    // suite than a silent multi-minute LSH+CC materialization.
-    // exact view name only: the q128 sweep's dedup_components_<τ> views
-    // are registered by their own gate (needsDedupSweep), not these
-    val compRe = "dedup_components(?![_0-9A-Za-z])".r
-    val edgeRe = "dedup_edges(?![_0-9A-Za-z])".r
-    val compInText = SqlSurface.texts
-      .filter(t => compRe.findFirstIn(t._2).isDefined).keySet
-    val edgeInText = SqlSurface.texts
-      .filter(t => edgeRe.findFirstIn(t._2).isDefined).keySet
-    assert(SqlSurface.needsDedupComponents === compInText,
-      s"needsDedupComponents drift: missing=${compInText -- SqlSurface.needsDedupComponents} stale=${SqlSurface.needsDedupComponents -- compInText}")
-    assert(SqlSurface.needsDedupEdges === edgeInText,
-      s"needsDedupEdges drift: missing=${edgeInText -- SqlSurface.needsDedupEdges} stale=${SqlSurface.needsDedupEdges -- edgeInText}")
+  test("each text registers exactly the views it reads, CTE names excluded") {
+    def read(name: String) = SqlSurface.viewsRead(SqlSurface.texts(name))
+    assert(read("q01_pricing_summary") === Set("lineitem"))
+    assert(read("q12_spread_flavors") === Set("book"))
+    // q128 reads dedup_scored only inside a scalar subquery
+    assert(read("q128_dedup_threshold_sweep") ===
+      Set("dedup_scored", "dedup_components_700", "dedup_components_800",
+        "dedup_components_900"))
+    assert(SqlSurface.viewsRead(
+      "WITH t AS (SELECT * FROM orders) SELECT * FROM t JOIN (" +
+        "WITH u AS (SELECT 1 AS x) SELECT * FROM u) v WHERE EXISTS (SELECT 1 FROM part)") ===
+      Set("orders", "part"))
   }
 
   test("unknown query name fails with a clear error") {
@@ -62,19 +59,44 @@ class SqlSurfaceSpec extends SparkTestBase {
       s"COVERAGE.md cites ${m.group(1)} texts; code has ${SqlSurface.texts.size}")
   }
 
+  test("every text-backed catalog entry has its text") {
+    val missing = SparkEntry.catalog.filter(_.isText).map(_.name)
+      .filterNot(SqlSurface.texts.contains)
+    assert(missing.isEmpty, s"text-backed entries without a text: $missing")
+  }
+
+  // A merged entry's catalog program IS its text, so its case checks only
+  // that the entry is wired to that text. Every other text runs first
+  // (with no cache of the program's in place), then the program, and the
+  // two must agree row for row — and must not be one plan written twice.
+  private val merged = SparkEntry.catalog.filter(_.isText).map(_.name).toSet
+
   for (name <- SqlSurface.texts.keys.toSeq.sorted) {
     test(s"$name: spark.sql text ≡ DataFrame catalog output (rows, order, schema)") {
-      val df = catalogQ(name).run(spark, dir)
-      val viaSql = SqlSurface.run(spark, dir, name)
-      assert(viaSql.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-        df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-        "schema (names + types, in order) must match")
-      val a = df.collect()
-      val b = viaSql.collect()
-      spark.catalog.clearCache()
-      assert(a.length === b.length, "row count")
-      a.zip(b).zipWithIndex.foreach { case ((ra, rb), i) =>
-        assert(ra === rb, s"row $i differs: df=$ra sql=$rb")
+      if (merged(name)) {
+        val viaSql = SqlSurface.run(spark, dir, name)
+        assertSameRows(name, catalogQ(name).run(spark, dir), viaSql)
+        spark.catalog.clearCache()
+      } else {
+        val viaSql = SqlSurface.run(spark, dir, name)
+        val (sqlOpt, sqlPhys) =
+          (viaSql.queryExecution.optimizedPlan, viaSql.queryExecution.executedPlan)
+        val b = viaSql.collect()
+        spark.catalog.clearCache()
+        val df = catalogQ(name).run(spark, dir)
+        val samePlan = sqlOpt.sameResult(df.queryExecution.optimizedPlan) &&
+          sqlPhys.sameResult(df.queryExecution.executedPlan)
+        val a = df.collect()
+        spark.catalog.clearCache()
+        assert(viaSql.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+          df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
+          "schema (names + types, in order) must match")
+        assert(a.length === b.length, "row count")
+        a.zip(b).zipWithIndex.foreach { case ((ra, rb), i) =>
+          assert(ra === rb, s"row $i differs: df=$ra sql=$rb")
+        }
+        assert(!samePlan, "the text and the DataFrame program plan the same optimized " +
+          "and physical plan: merge it (make the catalog entry Q.sql and delete the program)")
       }
     }
   }

@@ -9,7 +9,8 @@ import java.nio.file.Files
 /** The one-exchange graph loops against verbatim copies of the loops
   * before them ([[FrozenGraphLoops]], [[graft.text.FrozenTriangles]]):
   * the beam traversal behind q161, q166, q168 and the sharded hybrid;
-  * q165's label propagation; q177's group statistics. Rows must be equal,
+  * q161's one-aggregation tail; q165's label propagation; q177's group
+  * statistics. Rows must be equal,
   * in order, at 1, 4 and 7 shuffle partitions, on the sf0.001 corpus and
   * on crafted in-repo corpora: tied distances, a node with no edge, a
   * node with no out-edge, neighbours drawn from two frontier nodes, the
@@ -116,6 +117,15 @@ class GraphLoopLayoutSpec extends SparkTestBase {
     sweep { parts =>
       for ((name, setting) <- settings; (beam, hops) <- Seq(BsBeam -> BsHops, 1 -> 4, 3 -> 0))
         assertSameBeam(s"$name, $parts partitions", setting, beam, hops)
+    }
+  }
+
+  test("q161 equals its frozen two-exchange tail on sf0.001 and the crafted corpora at 1/4/7 partitions") {
+    sweep { parts =>
+      for ((name, d) <- Seq("sf0.001" -> dir, "crafted corpus" -> craftedDir, "2-node corpus" -> twoDir))
+        assertSameRows(s"q161 on the $name, $parts partitions",
+          graft.SparkEntry.queries("q161_graph_beam_search")(spark, d),
+          FrozenGraphLoops.q161(spark, d))
     }
   }
 
