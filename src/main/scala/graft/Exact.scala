@@ -61,7 +61,8 @@ object Exact {
   // Same recipe, carried as unscaled longs through a primitive SUM(LONG)
   // hash aggregate instead of Decimal boxing (graft.functions.DecSum) —
   // bit-identical while |Σ|·10^s < 2⁶³, loud ANSI overflow beyond. The
-  // caller must have run `DecSum.ensureRegistered(session)`. Oracle SQL
+  // session must hold the kernels (`functions.Kernels.register`, which
+  // `Tables` runs on every session it builds or loads into). Oracle SQL
   // is unchanged: the DuckDB mirror stays the decimal formulation.
 
   def sumExactFast(term: Column, scale: Int): Column =

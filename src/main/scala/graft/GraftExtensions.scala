@@ -2,41 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions entry point: registers graft's native Catalyst
-  * functions. Users opt in with
+/** SparkSessionExtensions entry point: injects every native Catalyst
+  * function of [[functions.Kernels.all]]. Pure-SQL users opt in with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`); library code paths use
-  * the idempotent per-session hooks (e.g.
-  * [[functions.DeepBookAgg.ensureRegistered]]).
+  * `builder.withExtensions(new GraftExtensions)`); the library itself
+  * puts the same list into each session it loads tables into
+  * ([[functions.Kernels.register]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction((
-      functions.DeepBookAgg.identifier,
-      functions.DeepBookAgg.info,
-      functions.DeepBookAgg.builder))
-    extensions.injectFunction((
-      functions.RollingHash.identifier,
-      functions.RollingHash.info,
-      functions.RollingHash.builder))
-    extensions.injectFunction((
-      functions.DecDot8.identifier,
-      functions.DecDot8.info,
-      functions.DecDot8.builder))
-    extensions.injectFunction((
-      functions.SynthLadder.identifier,
-      functions.SynthLadder.info,
-      functions.SynthLadder.builder))
-    extensions.injectFunction((
-      functions.LshBandCodes.identifier,
-      functions.LshBandCodes.info,
-      functions.LshBandCodes.builder))
-    extensions.injectFunction((
-      functions.ExactTopK.identifier,
-      functions.ExactTopK.info,
-      functions.ExactTopK.builder))
-    functions.DecSum.registrations.foreach(extensions.injectFunction)
-    functions.TextKernels.registrations.foreach(extensions.injectFunction)
-  }
+  override def apply(extensions: SparkSessionExtensions): Unit =
+    functions.Kernels.all.foreach(extensions.injectFunction)
 }

@@ -40,12 +40,9 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String,
             spreadOk: Boolean = false): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // every query path may use the Exact fast-sum / ordered-dot kernels;
-    // registration is an idempotent registry put, so doing it here keeps
-    // call sites clean
-    graft.functions.DecSum.ensureRegistered(spark)
-    graft.functions.OrdDot.ensureRegistered(spark)
-    graft.functions.JaroWinkler.ensureRegistered(spark)
+    // every catalog query loads through here, so a session it runs in
+    // holds the kernels it calls by name (a no-op once they are there)
+    graft.functions.Kernels.register(spark)
     val df = normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
     if (spreadOk) spread(df) else df
   }
@@ -122,8 +119,8 @@ object Tables {
     * partitions = cores, AQE on, UTC). On a real cluster the same code
     * runs unchanged; only master/memory configs differ. Every session
     * the repo builds (Bench, Verify, the probes, the test JVM) comes from
-    * here, so all of them get the same codegen reuse settings and the
-    * same local filesystem.
+    * here, so all of them get the same codegen reuse settings, the same
+    * local filesystem and the native kernels ([[graft.functions.Kernels]]).
     *
     * `file:` goes through [[graft.io.NioLocalFileSystem]] (`FileSystem`)
     * and [[graft.io.NioLocalFs]] (`FileContext`, which Spark's streaming
@@ -162,6 +159,7 @@ object Tables {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.Kernels.register(spark)
     spark
   }
 }

@@ -389,8 +389,6 @@ object BookQueries {
       // SyntheticBook.fromEvents, pinned by ArraySchemaSpec), and
       // deep_book_agg folds all metrics in one codegen'd pass per side
       // (DeepBookAggSpec pins equality with the HOF folds)
-      graft.functions.DeepBookAgg.ensureRegistered(s)
-      graft.functions.SynthLadder.ensureRegistered(s)
       base
         .withColumn("bids", expr(s"synth_ladder(seq, best_bid, $K, 0)"))
         .withColumn("asks", expr(s"synth_ladder(seq, best_ask, $K, 1)"))

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -90,13 +88,6 @@ object AHashBands {
     new GenericArrayData(bands.map(x => x: Any))
   }
 
-  /** Idempotent session registration (same pattern as [[RollingHash]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("ahash_bands",
-        exprs => AHashBands(exprs(0)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("ahash_bands")
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("ahash_bands", classOf[AHashBands])(exprs => AHashBands(exprs(0))))
 }

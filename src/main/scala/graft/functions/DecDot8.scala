@@ -2,10 +2,8 @@ package graft.functions
 
 import java.math.RoundingMode
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -124,15 +122,6 @@ object DecDot8 {
     java.lang.Double.valueOf(new java.math.BigDecimal(acc, 8).doubleValue())
   }
 
-  /** Idempotent session registration. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("dec_dot8",
-        exprs => DecDot8(exprs(0), exprs(1)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("dec_dot8")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[DecDot8].getName, "dec_dot8")
-  val builder: Seq[Expression] => Expression = exprs => DecDot8(exprs(0), exprs(1))
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("dec_dot8", classOf[DecDot8])(exprs => DecDot8(exprs(0), exprs(1))))
 }

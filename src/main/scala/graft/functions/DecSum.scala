@@ -2,10 +2,8 @@ package graft.functions
 
 import java.math.RoundingMode
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
@@ -40,23 +38,9 @@ object DecSum {
       .doubleValue()
   }
 
-  /** Idempotent session registration of both kernels. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    val reg = spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dec_unscaled",
-      exprs => DecUnscaled(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("unscaled_dbl",
-      exprs => UnscaledDbl(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("dec_unscaled"),
-      new ExpressionInfo(classOf[DecUnscaled].getName, "dec_unscaled"),
-      exprs => DecUnscaled(exprs(0), exprs(1))),
-    (FunctionIdentifier("unscaled_dbl"),
-      new ExpressionInfo(classOf[UnscaledDbl].getName, "unscaled_dbl"),
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("dec_unscaled", classOf[DecUnscaled])(exprs => DecUnscaled(exprs(0), exprs(1))),
+    Kernels.kernel("unscaled_dbl", classOf[UnscaledDbl])(
       exprs => UnscaledDbl(exprs(0), exprs(1), exprs(2))))
 }
 

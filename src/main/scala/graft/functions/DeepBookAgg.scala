@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -166,17 +164,7 @@ object DeepBookAgg {
     out
   }
 
-  /** Idempotent session registration (public-API surface for users is
-    * [[graft.GraftExtensions]]; this direct hook serves library callers).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("deep_book_agg",
-        exprs => DeepBookAgg(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("deep_book_agg")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[DeepBookAgg].getName, "deep_book_agg")
-  val builder: Seq[Expression] => Expression = exprs => DeepBookAgg(exprs(0), exprs(1), exprs(2))
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("deep_book_agg", classOf[DeepBookAgg])(
+      exprs => DeepBookAgg(exprs(0), exprs(1), exprs(2))))
 }

@@ -3,10 +3,9 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.PriorityQueue
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -116,17 +115,7 @@ case class ExactTopK(
 }
 
 object ExactTopK {
-  /** Idempotent session registration (analyzer wraps the returned
-    * AggregateFunction in an AggregateExpression).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("exact_topk",
-        exprs => ExactTopK(exprs(0), exprs(1)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("exact_topk")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[ExactTopK].getName, "exact_topk")
-  val builder: Seq[Expression] => Expression = exprs => ExactTopK(exprs(0), exprs(1))
+  /** The analyzer wraps the built AggregateFunction in an AggregateExpression. */
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("exact_topk", classOf[ExactTopK])(exprs => ExactTopK(exprs(0), exprs(1))))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,15 +103,10 @@ object JaroWinkler {
     } else jaro
   }
 
-  /** Idempotent session registration. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("jaro_winkler",
-        {
-          case Seq(a, b) => JaroWinkler(a, b)
-          case exprs => throw new IllegalArgumentException(
-            s"jaro_winkler requires exactly 2 arguments (got ${exprs.length})")
-        }, "built-in")
-  }
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("jaro_winkler", classOf[JaroWinkler]) {
+      case Seq(a, b) => JaroWinkler(a, b)
+      case exprs => throw new IllegalArgumentException(
+        s"jaro_winkler requires exactly 2 arguments (got ${exprs.length})")
+    })
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -79,11 +78,6 @@ object LevBytes {
     prev(n)
   }
 
-  /** Idempotent session registration (same pattern as [[RollingHash]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("lev_bytes",
-        exprs => LevBytes(exprs(0), exprs(1)), "built-in")
-  }
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("lev_bytes", classOf[LevBytes])(exprs => LevBytes(exprs(0), exprs(1))))
 }

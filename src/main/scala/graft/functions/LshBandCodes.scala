@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -93,16 +91,7 @@ object LshBandCodes {
     new GenericArrayData(codes)
   }
 
-  /** Idempotent session registration. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("lsh_band_codes",
-        exprs => LshBandCodes(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("lsh_band_codes")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[LshBandCodes].getName, "lsh_band_codes")
-  val builder: Seq[Expression] => Expression =
-    exprs => LshBandCodes(exprs(0), exprs(1), exprs(2))
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("lsh_band_codes", classOf[LshBandCodes])(
+      exprs => LshBandCodes(exprs(0), exprs(1), exprs(2))))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,15 +82,10 @@ object OrdDot {
     java.lang.Double.valueOf(acc)
   }
 
-  /** Idempotent session registration. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("ord_dot",
-        {
-          case Seq(a, b) => OrdDot(a, b)
-          case exprs => throw new IllegalArgumentException(
-            s"ord_dot requires exactly 2 arguments (got ${exprs.length})")
-        }, "built-in")
-  }
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("ord_dot", classOf[OrdDot]) {
+      case Seq(a, b) => OrdDot(a, b)
+      case exprs => throw new IllegalArgumentException(
+        s"ord_dot requires exactly 2 arguments (got ${exprs.length})")
+    })
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -124,16 +122,7 @@ object RollingHash {
     out
   }
 
-  /** Idempotent session registration (public surface: [[graft.GraftExtensions]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("rolling_hash",
-        exprs => RollingHash(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("rolling_hash")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash")
-  val builder: Seq[Expression] => Expression =
-    exprs => RollingHash(exprs(0), exprs(1), exprs(2), exprs(3))
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("rolling_hash", classOf[RollingHash])(
+      exprs => RollingHash(exprs(0), exprs(1), exprs(2), exprs(3))))
 }

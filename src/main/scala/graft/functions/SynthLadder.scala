@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -123,16 +122,7 @@ object SynthLadder {
     new GenericArrayData(out)
   }
 
-  /** Idempotent session registration. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction("synth_ladder",
-        exprs => SynthLadder(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-  }
-
-  val identifier: FunctionIdentifier = FunctionIdentifier("synth_ladder")
-  val info: ExpressionInfo = new ExpressionInfo(classOf[SynthLadder].getName, "synth_ladder")
-  val builder: Seq[Expression] => Expression =
-    exprs => SynthLadder(exprs(0), exprs(1), exprs(2), exprs(3))
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("synth_ladder", classOf[SynthLadder])(
+      exprs => SynthLadder(exprs(0), exprs(1), exprs(2), exprs(3))))
 }

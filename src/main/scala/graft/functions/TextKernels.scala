@@ -3,11 +3,9 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -454,38 +452,14 @@ object TextKernels {
   }
 
   // ------------------------------------------------------------------
-  /** Idempotent session registration of the kernels. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-    val reg = spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_agg",
-      exprs => ShingleAgg(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_spans",
-      exprs => MinhashSpans(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("shingle_overlap",
-      exprs => ShingleOverlap(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hash48",
-      exprs => ShingleHash48(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("char_grams",
-      exprs => CharGrams(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_inter_count",
-      exprs => SortedInterCount(exprs(0), exprs(1)), "built-in")
-  }
-
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("shingle_agg"),
-      new ExpressionInfo(classOf[ShingleAgg].getName, "shingle_agg"),
-      exprs => ShingleAgg(exprs(0), exprs(1))),
-    (FunctionIdentifier("minhash_spans"),
-      new ExpressionInfo(classOf[MinhashSpans].getName, "minhash_spans"),
+  val registrations: Seq[Kernels.Registration] = Seq(
+    Kernels.kernel("shingle_agg", classOf[ShingleAgg])(exprs => ShingleAgg(exprs(0), exprs(1))),
+    Kernels.kernel("minhash_spans", classOf[MinhashSpans])(
       exprs => MinhashSpans(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("shingle_overlap"),
-      new ExpressionInfo(classOf[ShingleOverlap].getName, "shingle_overlap"),
+    Kernels.kernel("shingle_overlap", classOf[ShingleOverlap])(
       exprs => ShingleOverlap(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("shingle_hash48"),
-      new ExpressionInfo(classOf[ShingleHash48].getName, "shingle_hash48"),
-      exprs => ShingleHash48(exprs(0), exprs(1))),
-    (FunctionIdentifier("sorted_inter_count"),
-      new ExpressionInfo(classOf[SortedInterCount].getName, "sorted_inter_count"),
+    Kernels.kernel("shingle_hash48", classOf[ShingleHash48])(exprs => ShingleHash48(exprs(0), exprs(1))),
+    Kernels.kernel("char_grams", classOf[CharGrams])(exprs => CharGrams(exprs(0), exprs(1))),
+    Kernels.kernel("sorted_inter_count", classOf[SortedInterCount])(
       exprs => SortedInterCount(exprs(0), exprs(1))))
 }

@@ -83,7 +83,8 @@ object PlotSeriesJob {
     val s60 = raw.select(BookMetrics.relSpreadBpsVector(bb, ba).as("spread_bps"))
       .filter(col("spread_bps").isNotNull)
     val mm = s60.agg(min("spread_bps"), max("spread_bps")).collect()(0)
-    val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
+    // no spread to bin (an empty input): any range gives the empty (bin, n) frame
+    val (lo, hi) = if (mm.isNullAt(0)) (0.0, 0.0) else (mm.getDouble(0), mm.getDouble(1))
     val binW = if (hi > lo) (hi - lo) / 60.0 else 1.0
     val spreadHist = s60
       .withColumn("bin", least(floor((col("spread_bps") - lit(lo)) / lit(binW)), lit(59L)))

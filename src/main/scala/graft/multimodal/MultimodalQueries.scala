@@ -32,7 +32,6 @@ object MultimodalQueries {
     */
   val q117 = Q("q117_binary_ahash_neardup",
     (s, dir) => {
-      graft.functions.AHashBands.ensureRegistered(s)
       val hashed = Multimodal.syntheticAssets(s, dir, spread = true).toDF()
         .select(col("asset_id"), expr("ahash_bands(payload)").as("bands"))
       val banded = hashed.select(col("asset_id"), col("bands"),

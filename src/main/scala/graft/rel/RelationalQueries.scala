@@ -353,7 +353,6 @@ object RelationalQueries {
     */
   val q42 = Q("q42_sketch_aggregates",
     (s, dir) => {
-      graft.functions.ExactTopK.ensureRegistered(s)
       val sess = s
       import sess.implicits._
       // no spread: measured round 18 (receipts/q42_perstage_r18.json) —
@@ -678,7 +677,6 @@ object RelationalQueries {
     */
   val q116 = Q("q116_hybrid_skew_join",
     (s, dir) => {
-      graft.functions.DecSum.ensureRegistered(s)
       val li = Tables(s, dir, "lineitem")
       val ord = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))

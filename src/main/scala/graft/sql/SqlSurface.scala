@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions.col
   *     over TextQueries' memos (`dedup_edges`, `dedup_components`,
   *     `dedup_scored`, `dedup_components_{700,800,900}`).
   *   - [[registerViews]] registers the tables plus `book` for a user's
-  *     own SQL. Both register the native kernel functions, so
-  *     `dec_unscaled`/`unscaled_dbl` (exact float aggregation),
-  *     `shingle_agg`/`minhash_spans` (text), `ord_dot` (vectors) are all
-  *     callable from plain SQL.
+  *     own SQL. Both leave the session with every native kernel
+  *     ([[graft.functions.Kernels]]), so `dec_unscaled`/`unscaled_dbl`
+  *     (exact float aggregation), `shingle_agg`/`minhash_spans` (text),
+  *     `ord_dot` (vectors) and the rest are callable from plain SQL.
   *
   * Dialect note: the book fragments live in [[BookSql]] in DuckDB
   * spelling so the oracle gate can run them; the only divergence is the
@@ -38,21 +38,6 @@ import org.apache.spark.sql.functions.col
 object SqlSurface {
 
   private val D = 5
-
-  private def registerKernels(spark: SparkSession): Unit = {
-    graft.functions.TextKernels.ensureRegistered(spark)
-    graft.functions.DeepBookAgg.ensureRegistered(spark)
-    graft.functions.RollingHash.ensureRegistered(spark)
-    graft.functions.ExactTopK.ensureRegistered(spark)
-    graft.functions.DecDot8.ensureRegistered(spark)
-    graft.functions.OrdDot.ensureRegistered(spark)
-    graft.functions.LshBandCodes.ensureRegistered(spark)
-    graft.functions.LshBandCodesMd5.ensureRegistered(spark)
-    graft.functions.SynthLadder.ensureRegistered(spark)
-    graft.functions.JaroWinkler.ensureRegistered(spark)
-    graft.functions.LevBytes.ensureRegistered(spark)
-    graft.functions.AHashBands.ensureRegistered(spark)
-  }
 
   private val baseViews: Seq[String] = Tables.names :+ "book"
 
@@ -74,11 +59,10 @@ object SqlSurface {
   }
 
   /** Register the ten testdata tables + the derived `book` as temp views
-    * and ensure every native kernel is in the session's FunctionRegistry.
+    * (each table load registers the native kernels, see [[Tables.apply]]).
     * Idempotent; call once per (session, sfDir).
     */
   def registerViews(spark: SparkSession, sfDir: String): Unit = {
-    registerKernels(spark)
     baseViews.foreach(v => views(v)(spark, sfDir).createOrReplaceTempView(v))
   }
 
@@ -4658,7 +4642,7 @@ object SqlSurface {
   def run(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val sql = texts.getOrElse(name, sys.error(
       s"unknown SQL-surface query '$name' (${texts.size} texts known)"))
-    registerKernels(spark)
+    graft.functions.Kernels.register(spark)
     viewsRead(sql).foreach(v =>
       views.get(v).foreach(_(spark, sfDir).createOrReplaceTempView(v)))
     spark.sql(sql)

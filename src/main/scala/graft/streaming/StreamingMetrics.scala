@@ -160,7 +160,7 @@ object StreamingMetrics {
                       threshold: Double = 0.8,
                       sigBcastMaxDocs: Long = NdSigBcastMaxDocs,
                       txtBcastMaxDocs: Long = NdTxtBcastMaxDocs): DataFrame = {
-    graft.functions.TextKernels.ensureRegistered(base.sparkSession)
+    graft.functions.Kernels.register(base.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val baseSig = bandSignatures(
         base.select(col("doc_id"), col("text")), "base_id", "base_text")
@@ -588,7 +588,7 @@ object StreamingMetrics {
     */
   def streamLinkage(dirty: Dataset[LinkRow],
                     clean: org.apache.spark.sql.DataFrame): Dataset[LinkOut] = {
-    graft.functions.JaroWinkler.ensureRegistered(dirty.sparkSession)
+    graft.functions.Kernels.register(dirty.sparkSession)
     implicit val outEnc: Encoder[LinkOut] = Encoders.product[LinkOut]
     implicit val stEnc: Encoder[LinkState] = Encoders.product[LinkState]
     val cand = dirty
@@ -1046,7 +1046,7 @@ object StreamingMetrics {
                                latenessUs: Long = 0L,
                                flushTimeoutMs: Long = 0L,
                                nShards: Int = 16): Dataset[WmLinkOut] = {
-    graft.functions.JaroWinkler.ensureRegistered(dirty.sparkSession)
+    graft.functions.Kernels.register(dirty.sparkSession)
     implicit val outEnc: Encoder[WmLinkOut] = Encoders.product[WmLinkOut]
     implicit val stEnc: Encoder[WmLinkState] = Encoders.product[WmLinkState]
     // the same pass-tagged multi-blocking + bit-exact jaro_winkler verify

@@ -188,7 +188,6 @@ object IndexQueries {
     */
   val q121 = Q("q121_dsir_importance",
     (s, dir) => {
-      graft.functions.RollingHash.ensureRegistered(s)
       val toks = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("term"))

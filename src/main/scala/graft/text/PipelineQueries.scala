@@ -390,7 +390,6 @@ object PipelineQueries {
     */
   val q64 = Q("q64_incremental_dedup",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       val nShingle = 8
       val docs = Tables(s, dir, "documents", spreadOk = true)
       // every 5th doc forms the incoming batch (deterministic and
@@ -1020,7 +1019,6 @@ object PipelineQueries {
     */
   val q82 = Q("q82_release_manifest",
     (s, dir) => {
-      graft.functions.RollingHash.ensureRegistered(s)
       val base = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
         .withColumn("split", expr(
@@ -1274,7 +1272,6 @@ object PipelineQueries {
     */
   private[graft] def denseTopK(s: SparkSession, dir: String, k: Int,
                               dims: Option[Int] = None): DataFrame = {
-    graft.functions.DecDot8.ensureRegistered(s)
     val emb = dims.fold(col("embedding"))(d => slice(col("embedding"), 1, d))
     val en = Tables(s, dir, "embeddings")
       .withColumn("e", emb)
@@ -2088,7 +2085,6 @@ object PipelineQueries {
       // one-loop char_grams kernel (the interpreted
       // transform+substring lambda alone cost ~4 s at sf0.1); the
       // exploded stream feeds TWO consumers (bench set + train scan)
-      graft.functions.TextKernels.ensureRegistered(s)
       val grams = Tables(s, dir, "documents", spreadOk = true)
         .withColumn("split",
           when(h < 900, lit("train")).when(h < 950, lit("val")).otherwise(lit("test")))
@@ -2282,7 +2278,6 @@ object PipelineQueries {
     */
   val q154 = Q("q154_priority_sample_audit",
     (s, dir) => {
-      graft.functions.ExactTopK.ensureRegistered(s)
       // three consumers read the priority projection (τ aggregation, the
       // membership join, the true-mass audit) — persist it so the md5
       // fold, the dominant per-row cost, runs once per doc, not thrice

@@ -133,7 +133,6 @@ object TextQueries {
       // (functions.TextKernels) counts distinct shingles in one O(len)
       // hash-set pass per row — no explode, no shuffle, and none of the
       // O(len²) cost of array_distinct on non-primitive arrays
-      graft.functions.TextKernels.ensureRegistered(s)
       Tables(s, dir, "documents").orderBy("doc_id")
         .withColumn("sa", expr(s"shingle_agg(text, $N)"))
         .select(col("doc_id"), col("sa.n_positions").as("n_positions"),
@@ -153,7 +152,6 @@ object TextQueries {
       // disjoint 8-hex-char (32-bit) spans of it — computed per-document
       // by the native minhash_spans kernel (functions.TextKernels): one
       // O(len) loop per row, no shingle explode, no signature shuffle.
-      graft.functions.TextKernels.ensureRegistered(s)
       Tables(s, dir, "documents").orderBy("doc_id")
         .withColumn("sig", expr(s"minhash_spans(text, $N, 0)"))
         .select(col("doc_id") +:
@@ -178,7 +176,6 @@ object TextQueries {
       // distinct shingles via hash set, one md5 each, 32 hex-digit votes
       // — no explode, no 33-aggregate shuffle (and none of the global
       // .distinct() that regressed this query 3.4× in round 2)
-      graft.functions.TextKernels.ensureRegistered(s)
       Tables(s, dir, "documents").orderBy("doc_id")
         .withColumn("sa", expr(s"shingle_agg(text, $N)"))
         .select(col("doc_id"), col("sa.n_distinct").as("n_shingles"),
@@ -208,7 +205,6 @@ object TextQueries {
       // native shingle_overlap kernel: hash-set intersection per pair,
       // O(len) — array_intersect/array_union on array<string> are O(n²)
       // nested scans (no primitive-type fast path)
-      graft.functions.TextKernels.ensureRegistered(s)
       val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
       val a = d.as("a"); val b = d.as("b")
       a.join(b, col("b.doc_id") === col("a.doc_id") + 1)
@@ -286,7 +282,6 @@ object TextQueries {
   private[graft] def dedupCandidates(docs: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.TextKernels.ensureRegistered(docs.sparkSession)
       // 1. 16-component signature (4 salted md5s per shingle × 4
       // 8-hex-char span-mins) via the native minhash_spans kernel — one
       // O(len) loop per document, no shingle explode, no signature
@@ -479,7 +474,6 @@ object TextQueries {
       // w[i] = (h[i+8] − h[i]·B⁸) mod M — see functions.RollingHash for
       // the identity making it bit-equal to the oracle's per-window
       // Horner mirror
-      graft.functions.RollingHash.ensureRegistered(s)
       Tables(s, dir, "documents").orderBy("doc_id")
         .withColumn("rh", expr("rolling_hash(text, 8, 131, 1000000007)"))
         .select(col("doc_id"), col("rh.doc_fp").as("doc_fp"),
@@ -618,7 +612,6 @@ object TextQueries {
     */
   val q67 = Q("q67_simhash_neardup",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       // materialize the tiny signature table (2 longs/doc) so the
       // shingle_agg kernel — the expensive part — runs ONCE, not once
       // per self-join side (and again in each side's pushed-down
@@ -685,7 +678,6 @@ object TextQueries {
     */
   val q71 = Q("q71_simhash64_neardup",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       val sig = Tables(s, dir, "documents", spreadOk = true)
         .withColumn("simhash64", expr(s"shingle_agg(text, $N).simhash64"))
         .select(col("doc_id"), col("simhash64")).cache()
@@ -809,7 +801,6 @@ object TextQueries {
     */
   val q69 = Q("q69_cdc_chunk_dedup",
     (s, dir) => {
-      graft.functions.RollingHash.ensureRegistered(s)
       val base = Tables(s, dir, "documents")
         .withColumn("wins", expr("rolling_hash(text, 8, 131, 1000000007).wins"))
         .withColumn("n", length(col("text")))
@@ -1228,7 +1219,6 @@ object TextQueries {
     */
   val q102 = Q("q102_minhash_calibration",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       val docs = Tables(s, dir, "documents", spreadOk = true)
       val sig = docs
         .withColumn("sig", expr(s"minhash_spans(text, $N, 4)"))
@@ -1580,7 +1570,6 @@ object TextQueries {
     */
   val q108 = Q("q108_winnowing_overlap",
     (s, dir) => {
-      graft.functions.RollingHash.ensureRegistered(s)
       // MATERIALIZE the per-doc fingerprint arrays before exploding:
       // explode(computed_array) lets CollapseProject inline the whole
       // HOF chain into the Generate, which re-evaluates it per OUTPUT
@@ -1737,7 +1726,6 @@ object TextQueries {
     */
   val q110 = Q("q110_hll_distinct_audit",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       val sh = Tables(s, dir, "documents")
         .select(col("source"), explode(expr(s"shingle_hash48(text, $N)")).as("v"))
       // rho: leading zeros of the 42-bit suffix + 1 (suffix 0 => 43)
@@ -1844,7 +1832,6 @@ object TextQueries {
     */
   val q112 = Q("q112_bloom_decontam",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       // spread: the shingle kernel + the 4 md5 probe hashes are the
       // per-row hot loop, evaluated directly above a single-row-group
       // scan (Tables.spread scaladoc)
@@ -2024,7 +2011,6 @@ object TextQueries {
     */
   val q122 = Q("q122_edit_verified_dedup",
     (s, dir) => {
-      graft.functions.LevBytes.ensureRegistered(s)
       val txt = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
       val cells = scoredPairs(s, dir)
         .filter(col("n_union") > 0)
@@ -2241,7 +2227,6 @@ object TextQueries {
     */
   val q135 = Q("q135_skyline_docs",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       // (doc_id, x, y) is three longs per doc; cache it so the kernel
       // pass runs once — the frame feeds BOTH the distinct-point set and
       // the final join-back (measured 4.6 s -> ~2 s at sf0.1)
@@ -2462,7 +2447,6 @@ object TextQueries {
     */
   val q153 = Q("q153_sorted_neighborhood",
     (s, dir) => {
-      graft.functions.TextKernels.ensureRegistered(s)
       // The rank is computed on a SLIM frame (three scalars per doc —
       // GlobalRank's range shuffle, persist and offset pass all move
       // ~24 B rows) and broadcast back onto the shingle-array frame, so

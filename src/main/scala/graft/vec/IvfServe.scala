@@ -47,7 +47,6 @@ object IvfServe {
     */
   private[graft] def probeCells(emb: DataFrame, cent: DataFrame,
                                 p: Int): DataFrame = {
-    graft.functions.OrdDot.ensureRegistered(emb.sparkSession)
     val cs = cent.select("cid", "cvec").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
     require(cs.nonEmpty, "probeCells needs at least one centroid")
@@ -108,6 +107,7 @@ object IvfServe {
   def serve(en: DataFrame, cent: DataFrame, probes: DataFrame,
             nprobe: Int, k: Int,
             bcastMaxProbes: Long = ServeBcastMaxProbes): DataFrame = {
+    graft.functions.Kernels.register(en.sparkSession)
     val asg = ShardedGraphBuild.assignOrd(en.select("vec_id", "embedding"), cent)
       .select(col("vec_id").as("node"), col("cell").as("ncell"))
     val cands = en.select(col("vec_id").as("node"), col("embedding").as("ce"),
@@ -144,6 +144,7 @@ object IvfServe {
   def ivfSweepAudit(en: DataFrame, cent: DataFrame, nprobes: Seq[Int],
                     rk: Int, nProbes: Int = 32): Seq[(Int, Double, Double, Double)] = {
     require(nprobes.nonEmpty)
+    graft.functions.Kernels.register(en.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val pmax = nprobes.max
     // corpus side: one assignment pass (nearest cell only)

@@ -83,7 +83,6 @@ object ShardedGraphBuild {
     */
   private[graft] def assignOrd(emb: DataFrame, cent: DataFrame,
                                second: Boolean = false): DataFrame = {
-    graft.functions.OrdDot.ensureRegistered(emb.sparkSession)
     val cs = cent.select("cid", "cvec").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
     require(cs.nonEmpty, "assignOrd needs at least one centroid")
@@ -126,8 +125,7 @@ object ShardedGraphBuild {
     require(k >= 1 && k <= MaxCodebook,
       s"coarse codebook must be 1..$MaxCodebook, got $k")
     val s = en.sparkSession
-    // lloydMeans' cnorm2 rides the exact-decimal kernel
-    graft.functions.DecDot8.ensureRegistered(s)
+    graft.functions.Kernels.register(s)
     import s.implicits._
     val sample = (if (sampleMod <= 1) en
       else en.filter(h48("sgs#", col("vec_id"), lit(0)) % sampleMod === 0))
@@ -164,6 +162,7 @@ object ShardedGraphBuild {
   def buildSharded(en: DataFrame, cent: DataFrame, k: Int, kAlt: Int,
                    rounds: Int, sample: Int): DataFrame = {
     val s = en.sparkSession
+    graft.functions.Kernels.register(s)
     VectorQueries.ensureCkptDir(s)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val assigned = assignOrd(en.select("vec_id", "embedding"), cent, second = true)
@@ -280,7 +279,6 @@ object ShardedGraphBuild {
     */
   private[graft] def lshInitPairs(en: DataFrame, bands: Int, bits: Int,
                                   j: Int, cap: Int): DataFrame = {
-    graft.functions.LshBandCodes.ensureRegistered(en.sparkSession)
     val codes = en.select(col("vec_id"),
       posexplode(expr(s"lsh_band_codes(embedding, $bands, $bits)"))
         .as(Seq("band", "code")))
@@ -311,6 +309,7 @@ object ShardedGraphBuild {
                    rounds: Int, sample: Int, bands: Int = 4,
                    bits: Int = 16, j: Int = 4, cap: Int = 256): DataFrame = {
     val s = en.sparkSession
+    graft.functions.Kernels.register(s)
     VectorQueries.ensureCkptDir(s)
     val lshPairs = lshInitPairs(en, bands, bits, j, cap)
     var idxToFree: Option[DataFrame] = None
@@ -405,6 +404,7 @@ object ShardedGraphBuild {
                   beam: Int, hops: Int, rk: Int,
                   nProbes: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    graft.functions.Kernels.register(en.sparkSession)
     val asg = assignOrd(en.select("vec_id", "embedding"), cent, second = true)
       .select("vec_id", "cell", "cell2")
     val lo2 = en.select("vec_id").orderBy("vec_id").limit(2)

@@ -31,8 +31,8 @@ object VectorQueries {
   /** Exact decimal dot product of two float-array columns (double math
     * per term, rounded at 8dp, decimal-summed) — the native dec_dot8
     * kernel (functions.DecDot8), compiled twin of the `graft.Exact`
-    * fold; register with [[graft.functions.DecDot8.ensureRegistered]]
-    * before use.
+    * fold; resolved by name from the session's kernels
+    * ([[graft.functions.Kernels.register]]).
     */
   private def dotExpr(a: String, b: String): String = s"dec_dot8($a, $b)"
 
@@ -69,7 +69,6 @@ object VectorQueries {
   // ---------------------------------------------------------------- q34
   val q34 = Q("q34_embedding_stats",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       Tables(s, dir, "embeddings").orderBy("vec_id")
         .withColumn("dim", size(col("embedding")).cast("long"))
         .withColumn("norm2", expr(norm2Expr("embedding")))
@@ -105,7 +104,6 @@ object VectorQueries {
   // ---------------------------------------------------------------- q36
   val q36 = Q("q36_knn_bruteforce",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val en = Tables(s, dir, "embeddings", spreadOk = true)
         .withColumn("n2", expr(norm2Expr("embedding")))
       val q = en.filter(col("vec_id") < 8)
@@ -197,7 +195,6 @@ object VectorQueries {
       // every sign bit-identical to the HOF fold / DuckDB list_reduce
       // mirror) — the 32 interpreted aggregate(transform(...)) folds
       // this replaces were ~70% of the query's wall
-      graft.functions.LshBandCodes.ensureRegistered(s)
       // cached: both join sides and the verify join reuse the codes;
       // the harness clears it after the query
       val eb = Tables(s, dir, "embeddings")
@@ -302,7 +299,6 @@ object VectorQueries {
     */
   val q72 = Q("q72_embedding_neardup_wide",
     (s, dir) => {
-      graft.functions.LshBandCodesMd5.ensureRegistered(s)
       val eb = Tables(s, dir, "embeddings")
         .withColumn("n2", expr(norm2OrdExpr("embedding")))
         .withColumn("codes", expr("lsh_band_codes_md5(embedding, 4, 16)"))
@@ -524,8 +520,6 @@ object VectorQueries {
                                      cap: Int = HotBucketCap,
                                      family: String = "md5")
       : (DataFrame, DataFrame, DataFrame, Int) = {
-    graft.functions.LshBandCodes.ensureRegistered(s)
-    graft.functions.LshBandCodesMd5.ensureRegistered(s)
     val enc = if (family == "md5") "lsh_band_codes_md5" else "lsh_band_codes"
     val bits = bitsOverride.getOrElse(
       adaptiveBandBits(Tables(s, dir, "embeddings").count()))
@@ -581,7 +575,6 @@ object VectorQueries {
     */
   private def cellRanks(s: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.getOrCompute(s, s"ivf-cellranks:$dir") {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings")
       val perDim = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "x")))
@@ -613,7 +606,6 @@ object VectorQueries {
     */
   val q44 = Q("q44_ivf_ann",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings")
       val assigned = emb
         .join(cellRanks(s, dir).filter(col("crn") === 1)
@@ -691,7 +683,6 @@ object VectorQueries {
     */
   val q52 = Q("q52_ivf_multiprobe",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings")
       val ranked = cellRanks(s, dir)
       val assigned = emb
@@ -846,7 +837,6 @@ object VectorQueries {
     */
   val q54 = Q("q54_kmeans_ivf",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings", spreadOk = true).select(col("vec_id"), col("embedding"))
       val h = md5(concat(lit("seed#"), col("vec_id").cast("string")).cast("binary"))
       // seeds: distributed top-K by hash (the cluster sorts); cid = rank
@@ -968,7 +958,6 @@ object VectorQueries {
     */
   val q68 = Q("q68_int8_quant_recall",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val en = Tables(s, dir, "embeddings", spreadOk = true)
         .withColumn("mx", expr("aggregate(embedding, CAST(0 AS DOUBLE), " +
           "(acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE))))"))
@@ -1263,7 +1252,6 @@ object VectorQueries {
     */
   val q92 = Q("q92_pq_adc_recall",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings", spreadOk = true).select(col("vec_id"), col("embedding"))
       // every Lloyd round re-reads its subspace frame twice (assignment +
       // the per-dim mean join), plus the seed scan, the encode pass, and
@@ -1446,7 +1434,6 @@ object VectorQueries {
     */
   val q94 = Q("q94_mmr_diverse",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       // no spread: opted out round 18 — min-of-3 A/B in two windows was
       // noise-level (ON 1.09/1.32 vs OFF 1.25/1.20), and the floor's
       // extra exchange + CPU buys nothing for this broadcast-probe scan
@@ -1582,7 +1569,6 @@ object VectorQueries {
     */
   val q99 = Q("q99_centroid_drift",
     (s, dir) => {
-      graft.functions.DecSum.ensureRegistered(s)
       val cent = Tables(s, dir, "embeddings")
         .select(col("label"), expr("CAST(vec_id % 2 AS INT)").as("half"),
           posexplode(col("embedding")).as(Seq("pos0", "x")))
@@ -1660,7 +1646,6 @@ object VectorQueries {
     */
   val q100 = Q("q100_ann_tuning",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings", spreadOk = true)
       val ranked = cellRanks(s, dir)
       val assigned = emb
@@ -1913,7 +1898,6 @@ object VectorQueries {
     */
   val q138 = Q("q138_dim_truncation_recall",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings", spreadOk = true)
       def topk(kDims: Int): org.apache.spark.sql.DataFrame = {
         val sliceA = if (kDims == 64) "qe" else s"slice(qe, 1, $kDims)"
@@ -2019,7 +2003,6 @@ object VectorQueries {
     */
   val q147 = Q("q147_assignment_margin_audit",
     (s, dir) => {
-      graft.functions.DecDot8.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings", spreadOk = true)
       val perDim = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "x")))

@@ -47,7 +47,6 @@ class AdaptiveNearDupSpec extends SparkTestBase {
     val cap = 2
     val (_, _, audit, _) =
       VectorQueries.adaptiveNearDup(spark, dir, Some(bits), cap = cap)
-    graft.functions.LshBandCodesMd5.ensureRegistered(spark)
     // independent recount: per band, sum over (band, code) buckets of
     // max(occupancy - cap, 0)
     val expected = Tables(spark, dir, "embeddings")
@@ -77,8 +76,6 @@ class AdaptiveNearDupSpec extends SparkTestBase {
     // coefficients are independent, so bit (i, i+5) agreement sits near
     // the 50% coin-flip line. Measured over one 16-bit band on the gate
     // corpus, all 11 (i, i+5) bit pairs.
-    graft.functions.LshBandCodes.ensureRegistered(spark)
-    graft.functions.LshBandCodesMd5.ensureRegistered(spark)
     def agree(fn: String): Double = {
       val code = Tables(spark, dir, "embeddings")
         .select(element_at(expr(s"$fn(embedding, 1, 16)"), 1).as("c"))

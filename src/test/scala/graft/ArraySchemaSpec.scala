@@ -30,7 +30,6 @@ class ArraySchemaSpec extends SparkTestBase {
   }
 
   test("synth_ladder kernel equals the transform+named_struct formulation") {
-    graft.functions.SynthLadder.ensureRegistered(spark)
     val base = SyntheticBook.fromEvents(
       Tables(spark, "/root/testdata/sf0.001", "events"), 0)
     val K = 100

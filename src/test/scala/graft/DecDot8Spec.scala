@@ -26,7 +26,6 @@ class DecDot8Spec extends SparkTestBase {
   }
 
   test("dec_dot8 ≡ HOF decimal fold on mixed magnitudes (long fast path)") {
-    graft.functions.DecDot8.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     val rnd = new scala.util.Random(11)
@@ -44,7 +43,6 @@ class DecDot8Spec extends SparkTestBase {
   }
 
   test("dec_dot8 stays exact past the long-accumulator bound (wide fallback)") {
-    graft.functions.DecDot8.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     // |x·y| ≈ 1e14 → unscaled term ≈ 1e22 » Long.MaxValue: every term takes
@@ -63,7 +61,6 @@ class DecDot8Spec extends SparkTestBase {
   }
 
   test("two dec_dot8 calls on non-nullable inputs share a codegen scope") {
-    graft.functions.DecDot8.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     // Non-nullable children → nullSafeExec adds no braces → before the

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class DecSumSpec extends SparkTestBase {
 
   test("sumExactFast / sumExactRFast ≡ decimal formulation incl. nulls and empty groups") {
-    graft.functions.DecSum.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     val rnd = new scala.util.Random(23)
@@ -34,7 +33,6 @@ class DecSumSpec extends SparkTestBase {
   }
 
   test("dec_unscaled overflows loudly past the long bound instead of wrapping") {
-    graft.functions.DecSum.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     val e = intercept[Exception] {

@@ -63,7 +63,6 @@ class DedupScaleGuardSpec extends SparkTestBase {
   }
 
   test("SNM rank-back guard: broadcast and shuffle sides agree, plans differ") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val dir = "/root/testdata/sf0.001"
     val slim = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -208,7 +207,6 @@ class DedupScaleGuardSpec extends SparkTestBase {
   test("snmWindowPairs (lead + seam) ≡ the rank theta-join at every bucket size") {
     val sess = spark
     import sess.implicits._
-    graft.functions.TextKernels.ensureRegistered(spark)
     // 200 ranked rows with singleton "shingle" arrays; rank = id
     val ranked = (0L until 200L).map(i => (i, Seq(i), i))
       .toDF("doc_id", "sh", "rn")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.book.{BookMetrics, SyntheticBook}
-import graft.functions.DeepBookAgg
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -27,7 +26,6 @@ class DeepBookAggSpec extends SparkTestBase {
   }
 
   test("native kernel ≡ HOF folds bit-for-bit on the synthetic deep book") {
-    DeepBookAgg.ensureRegistered(spark)
     val withBoth = deepArrays
       .withColumn("vb", BookMetrics.validLevels(col("bids")))
       .withColumn("va", BookMetrics.validLevels(col("asks")))
@@ -56,7 +54,6 @@ class DeepBookAggSpec extends SparkTestBase {
   }
 
   test("kernel runs inside whole-stage codegen (no interpreted fallback)") {
-    DeepBookAgg.ensureRegistered(spark)
     val df = deepArrays.withColumn("m", expr("deep_book_agg(bids, asks, CAST(5.0 AS DOUBLE))"))
       .select(col("m.walk_cost"))
     val plan = df.queryExecution.executedPlan.toString
@@ -66,7 +63,6 @@ class DeepBookAggSpec extends SparkTestBase {
   }
 
   test("type check rejects malformed inputs") {
-    DeepBookAgg.ensureRegistered(spark)
     val e = intercept[Exception] {
       spark.range(1).selectExpr("deep_book_agg(array(1.0), array(2.0), CAST(1.0 AS DOUBLE))")
         .collect()

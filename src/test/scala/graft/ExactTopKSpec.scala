@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class ExactTopKSpec extends SparkTestBase {
 
   test("exact_topk ≡ sort-desc-take-k on small groups, ties and nulls") {
-    graft.functions.ExactTopK.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     val rnd = new scala.util.Random(11)

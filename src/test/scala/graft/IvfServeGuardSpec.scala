@@ -18,7 +18,6 @@ class IvfServeGuardSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
 
   private def fixtures() = {
-    graft.functions.OrdDot.ensureRegistered(spark)
     val en = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("n2", expr("ord_dot(embedding, embedding)"))

@@ -66,7 +66,6 @@ class IvfServeSpec extends SparkTestBase {
 
   test("serve at nprobe = K equals brute-force top-k, d2 bit-exact, full cost") {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.OrdDot.ensureRegistered(spark)
     val k = 8 // codebook size above
     val probes = cl.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding"), col("n2"))

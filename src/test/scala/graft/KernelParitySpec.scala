@@ -36,7 +36,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("shingle_agg ≡ array_distinct/md5-vote formulation on unicode + degenerate text") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val shingles = expr(
       s"array_distinct(transform(sequence(1, greatest(length(text) - ${N - 1}, 1)), i -> substring(text, i, $N)))")
     val votes = (1 to 32).map(j =>
@@ -57,7 +56,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("shingle_agg simhash64 ≡ per-bit md5-digest-vote formulation") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val shingles = expr(
       s"array_distinct(transform(sequence(1, greatest(length(text) - ${N - 1}, 1)), i -> substring(text, i, $N)))")
     // bit b = 4j + k votes on bit k of hex digit j's value
@@ -80,7 +78,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("minhash_spans ≡ salted md5 span-min formulation") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val raw = expr(
       s"transform(sequence(1, greatest(length(text) - ${N - 1}, 1)), i -> substring(text, i, $N))")
     def spanMin(k: Int, j: Int) = expr(
@@ -96,7 +93,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("shingle_overlap ≡ array_intersect/array_union sizes") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val sh = expr(
       s"array_distinct(transform(sequence(1, greatest(length(text) - ${N - 1}, 1)), i -> substring(text, i, $N)))")
     val a = docs.withColumn("sh", sh).as("a")
@@ -112,7 +108,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("shingle_hash48 ≡ sorted conv(md5-prefix) formulation on unicode + degenerate text") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     // the kernel's order is first-occurrence; compare as SORTED sets
     val kernel = expr(s"array_sort(shingle_hash48(text, $N))")
     val recipe = expr(
@@ -125,7 +120,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("sorted_inter_count ≡ size(array_intersect) on all doc pairs") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val sh = docs.select(col("doc_id"),
       expr(s"array_sort(shingle_hash48(text, $N))").as("sh"))
     val pairs = sh.as("a").crossJoin(sh.as("b"))
@@ -139,7 +133,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("rolling_hash ≡ per-window Horner slice+aggregate formulation") {
-    graft.functions.RollingHash.ensureRegistered(spark)
     val M = 1000000007L; val B = 131L
     val hof = docs
       .withColumn("codes",
@@ -158,7 +151,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("char_grams ≡ transform/substring formulation on unicode + degenerate text") {
-    graft.functions.TextKernels.ensureRegistered(spark)
     val hofExpr = expr(
       s"transform(sequence(1, greatest(length(text) - ${N - 1}, 1)), i -> substring(text, i, $N))")
     assertNoDiff(
@@ -169,7 +161,6 @@ class KernelParitySpec extends SparkTestBase {
   }
 
   test("ord_dot ≡ aggregate/zip_with left fold, bit-exact, incl. degenerate arrays") {
-    graft.functions.OrdDot.ensureRegistered(spark)
     val sess = spark
     import sess.implicits._
     val rnd = new scala.util.Random(11)

@@ -44,7 +44,6 @@ class KmeansIvfSpec extends SparkTestBase {
   test("withCell: a 1-centroid codebook assigns every vector to that cell") {
     // round 13's least() guard: Spark's least() needs >= 2 args, so a
     // K=1 codebook must bypass it (pre-fix this threw at analysis time)
-    graft.functions.DecDot8.ensureRegistered(spark)
     import spark.implicits._
     val emb = Seq((1L, Seq(1.0, 2.0)), (2L, Seq(-3.0, 0.5)), (3L, Seq(0.0, 0.0)))
       .toDF("vec_id", "embedding")
@@ -55,7 +54,6 @@ class KmeansIvfSpec extends SparkTestBase {
   }
 
   test("withCell: an empty codebook frame fails loudly, not with an analysis error") {
-    graft.functions.DecDot8.ensureRegistered(spark)
     import spark.implicits._
     val emb = Seq((1L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
     val cent = Seq.empty[(Long, Seq[Double], Double)].toDF("cid", "cvec", "cnorm2")

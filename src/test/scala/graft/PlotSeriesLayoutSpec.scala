@@ -12,8 +12,8 @@ import java.nio.file.Files
   * same rows in the same order, keyed and golden, at 1, 4 and 7 shuffle
   * partitions. Inputs are built in-repo: a multi-series synthesized book
   * with event-time ties, out-of-order stamps and NULL, zero, negative and
-  * crossed mids, plus one-series and reduced-key schemas. (An empty input
-  * fails in both: the spread histogram reads the min of no rows.)
+  * crossed mids, plus one-series and reduced-key schemas. An empty input
+  * gives four empty frames with the same schemas.
   */
 class PlotSeriesLayoutSpec extends SparkTestBase {
 
@@ -65,6 +65,22 @@ class PlotSeriesLayoutSpec extends SparkTestBase {
         assertSameRows(s"tail: $label", got.tail, want.tail)
         assertSameRows(s"depth curve: $label", got.depthCurve, want.depthCurve)
         assertSameRows(s"spread histogram: $label", got.spreadHist, want.spreadHist)
+      }
+    }
+  }
+
+  test("an empty input gives four empty frames with their schemas") {
+    val path = Files.createTempDirectory("plot-empty").toString + "/empty.parquet"
+    spark.read.parquet(inputs.head._2).limit(0).write.parquet(path)
+    for (golden <- Seq(false, true)) {
+      def run(p: String) = PlotSeriesJob.run(spark, p, depth, rvWindow, corrWindow, tailN,
+        golden = golden)
+      val (got, want) = (run(path), run(inputs.head._2))
+      Seq("series" -> (got.series, want.series), "tail" -> (got.tail, want.tail),
+        "depth curve" -> (got.depthCurve, want.depthCurve),
+        "spread histogram" -> (got.spreadHist, want.spreadHist)).foreach { case (label, (g, w)) =>
+        assert(g.schema === w.schema, s"$label, golden=$golden")
+        assert(g.isEmpty, s"$label, golden=$golden")
       }
     }
   }

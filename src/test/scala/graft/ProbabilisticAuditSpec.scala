@@ -20,7 +20,6 @@ class ProbabilisticAuditSpec extends SparkTestBase {
 
   /** (source, v) pairs from the same kernel the query uses. */
   private lazy val srcHashes: Map[String, Set[Long]] = {
-    graft.functions.TextKernels.ensureRegistered(spark)
     Tables(spark, dir, "documents")
       .select(col("source"), explode(expr("shingle_hash48(text, 8)")).as("v"))
       .distinct().collect()
@@ -102,7 +101,6 @@ class ProbabilisticAuditSpec extends SparkTestBase {
   test("q112: exact contamination side matches a pure-Scala semi-join") {
     // Rebuild the train/eval split and exact hit counts from the kernel's
     // own (doc_id, v) stream; the Bloom filter cannot change this side.
-    graft.functions.TextKernels.ensureRegistered(spark)
     val docHashes = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), explode(expr("shingle_hash48(text, 8)")).as("v"))
       .distinct().collect()
@@ -128,7 +126,6 @@ class ProbabilisticAuditSpec extends SparkTestBase {
     // distinct train shingle, recomputed independently of Spark's md5/conv
     // expressions — so a bitmap indexing or shift bug cannot hide behind
     // the (looser) no-false-negative invariant above.
-    graft.functions.TextKernels.ensureRegistered(spark)
     val docHashes = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), explode(expr("shingle_hash48(text, 8)")).as("v"))
       .distinct().collect()

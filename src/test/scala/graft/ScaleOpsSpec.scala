@@ -95,7 +95,6 @@ class ScaleOpsSpec extends SparkTestBase {
     val plain = {
       val li = Tables(spark, dir, "lineitem")
       val ord = Tables(spark, dir, "orders").select("o_orderkey", "o_orderpriority")
-      graft.functions.DecSum.ensureRegistered(spark)
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),

@@ -72,7 +72,6 @@ class VecDedupSpec extends SparkTestBase {
   }
 
   test("16-bit bands (q72) generate strictly fewer candidates than 8-bit (q39)") {
-    graft.functions.LshBandCodes.ensureRegistered(spark)
     // candidate volume = Σ_buckets n·(n−1)/2 — the quantity that goes
     // N²/2^bits at fixed width (the measured q39 cliff in PERF.md);
     // width is the knob, and this pins the direction of the knob
