@@ -332,28 +332,8 @@ object BookQueries {
     * then applies the exact band filter. The oracle states the plain
     * BETWEEN join (DuckDB plans an IEJoin); results are identical.
     */
-  val q47 = Q("q47_gap_neighbors_rangejoin",
-    (s, dir) => {
-      val G = 3600000000L // 1-hour band, in µs
-      val b = bookDf(s, dir)
-        .withColumn("mid", BookMetrics.mid(col("best_bid"), col("best_ask")))
-        .select("sym", "seq", "ts_us", "mid")
-      val gaps = b.filter(col("mid").isNull)
-        .select(col("sym").as("g_sym"), col("seq").as("g_seq"), col("ts_us").as("g_ts"))
-        .withColumn("bkt", explode(array(
-          expr(s"g_ts div $G - 1"), expr(s"g_ts div $G"), expr(s"g_ts div $G + 1"))))
-      val cands = b.select(col("sym").as("c_sym"), col("seq").as("c_seq"), col("ts_us").as("c_ts"))
-        .withColumn("bkt", expr(s"c_ts div $G"))
-      gaps.join(cands,
-        col("g_sym") === col("c_sym") && gaps("bkt") === cands("bkt") &&
-          col("c_seq") =!= col("g_seq") &&
-          abs(col("c_ts") - col("g_ts")) <= G, "left")
-        .groupBy(col("g_sym").as("sym"), col("g_seq"), col("g_ts"))
-        .agg(count(col("c_seq")).as("n_neighbors"),
-          min(abs(col("c_ts") - col("g_ts"))).as("min_dt_us"))
-        .orderBy("sym", "g_seq")
-    },
-    Some(withCte(s""",
+  val q47 = Q.sql("q47_gap_neighbors_rangejoin",
+    withCte(s""",
     bm AS (SELECT sym, seq, ts_us, ${BookSql.mid} AS mid FROM book),
     gaps AS (SELECT sym AS g_sym, seq AS g_seq, ts_us AS g_ts FROM bm WHERE mid IS NULL)
     SELECT g.g_sym AS sym, g.g_seq, g.g_ts,
@@ -363,7 +343,7 @@ object BookQueries {
       ON c.sym = g.g_sym AND c.seq != g.g_seq
       AND c.ts_us BETWEEN g.g_ts - 3600000000 AND g.g_ts + 3600000000
     GROUP BY g.g_sym, g.g_seq, g.g_ts
-    ORDER BY sym, g.g_seq""")))
+    ORDER BY sym, g.g_seq"""))
 
   // ---------------------------------------------------------------- q50
   /** Depth-100 book metrics END-TO-END on the array compute schema
@@ -375,35 +355,8 @@ object BookQueries {
     * which reproduces Spark's `aggregate()` left-fold order exactly
     * (needed for FP-exact notional/slope/walk sums).
     */
-  val q50 = Q("q50_deep_book_array",
-    (s, dir) => {
-      val K = 100
-      // sort-early: the trailing global sort would range-sample (and so
-      // re-execute) the kernel projection; sorting the narrow base keeps
-      // the deep-book pass single-execution (see q11)
-      val base = SyntheticBook.fromEvents(Tables(s, dir, "events"), 0).orderBy("seq")
-      // the native kernels: synth_ladder builds each side's K-level
-      // ARRAY<STRUCT> in one compiled loop (the interpreted
-      // transform+named_struct formulation it replaces was ~85% of this
-      // query's wall — level formulas in lock-step with
-      // SyntheticBook.fromEvents, pinned by ArraySchemaSpec), and
-      // deep_book_agg folds all metrics in one codegen'd pass per side
-      // (DeepBookAggSpec pins equality with the HOF folds)
-      base
-        .withColumn("bids", expr(s"synth_ladder(seq, best_bid, $K, 0)"))
-        .withColumn("asks", expr(s"synth_ladder(seq, best_ask, $K, 1)"))
-        .withColumn("m", expr("deep_book_agg(bids, asks, CAST(50.0 AS DOUBLE))"))
-        .select(col("seq"), col("sym"),
-          col("m.imbalance_k").as("imbalance_k"),
-          col("m.notional_bid_k").as("notional_bid_k"),
-          col("m.notional_ask_k").as("notional_ask_k"),
-          col("m.slope_bid").as("slope_bid"),
-          col("m.slope_ask").as("slope_ask"),
-          col("m.walk_filled").as("walk_filled"),
-          col("m.walk_cost").as("walk_cost"),
-          col("m.walk_touched").as("walk_touched"))
-    },
-    Some {
+  val q50 = Q.sql("q50_deep_book_array",
+    {
       // ordered-fold helpers: list_reduce over a prepended zero struct ≡
       // Spark aggregate(); elements are pre-shaped to the accumulator type
       // NOTE field order: DuckDB's list_reduce updates the struct
@@ -506,32 +459,8 @@ object BookQueries {
     * no per-key sort, which is what makes bars cheaper than any of the
     * §2.5 series metrics at fleet scale.
     */
-  val q176 = Q("q176_ohlc_bars",
-    (s, dir) => {
-      val barUs = 3600000000L // 1-hour bars, ts_us grid
-      val b = bookDf(s, dir)
-        .withColumn("mid", BookMetrics.mid(col("best_bid"), col("best_ask")))
-        .filter(col("mid").isNotNull)
-        .withColumn("bar", expr(s"ts_us div $barUs"))
-        .withColumn("vol",
-          (coalesce(col("bid1_size"), lit(0.0)) + coalesce(col("ask1_size"), lit(0.0)))
-            .cast("long"))
-      b.groupBy("sym", "bar")
-        .agg(
-          min_by(col("mid"), col("seq")).as("open"),
-          max("mid").as("high"),
-          min("mid").as("low"),
-          max_by(col("mid"), col("seq")).as("close"),
-          count(lit(1)).as("n_ticks"),
-          sum("vol").as("l1_volume"),
-          Exact.sumExactR(col("mid") * col("vol"), 6, 6).as("pv"))
-        .withColumn("bar_vwap",
-          when(col("l1_volume") > 0, col("pv") / col("l1_volume")))
-        .select("sym", "bar", "open", "high", "low", "close", "n_ticks",
-          "l1_volume", "bar_vwap")
-        .orderBy("sym", "bar")
-    },
-    Some(withCte(s""",
+  val q176 = Q.sql("q176_ohlc_bars",
+    withCte(s""",
     m AS (
       SELECT sym, seq, ts_us // 3600000000 AS bar, ${BookSql.mid} AS mid,
         CAST(COALESCE(bid1_size, 0.0::DOUBLE) + COALESCE(ask1_size, 0.0::DOUBLE) AS BIGINT) AS vol
@@ -550,7 +479,7 @@ object BookQueries {
     )
     SELECT sym, bar, open, high, low, close, n_ticks, l1_volume,
       CASE WHEN l1_volume > 0 THEN pv / l1_volume END AS bar_vwap
-    FROM agg ORDER BY sym, bar""")))
+    FROM agg ORDER BY sym, bar"""))
 
   // ----------------------------------------------- q181: VPIN toxicity
   /** Volume-synchronized probability of informed trading (VPIN —
@@ -572,38 +501,8 @@ object BookQueries {
     * never ticks. All integer after the sign comparison, so the oracle
     * hash-matches at any partitioning.
     */
-  val q181 = Q("q181_vpin_toxicity",
-    (s, dir) => {
-      val V = 256L
-      val m = bookDf(s, dir)
-        .withColumn("mid", BookMetrics.mid(col("best_bid"), col("best_ask")))
-        .filter(col("mid").isNotNull)
-        .withColumn("vol",
-          (coalesce(col("bid1_size"), lit(0.0)) + coalesce(col("ask1_size"), lit(0.0)))
-            .cast("long"))
-      val prevMid = lag("mid", 1).over(w)
-      val withDir = m
-        .withColumn("dir_raw",
-          when(col("mid") > prevMid, lit(1)).when(col("mid") < prevMid, lit(-1)))
-        .withColumn("dir", coalesce(last("dir_raw", ignoreNulls = true).over(wRun), lit(1)))
-        .withColumn("cum", sum("vol").over(wRun))
-        .withColumn("bucket", expr(s"(cum - vol) div $V"))
-      val buckets = withDir.groupBy("sym", "bucket")
-        .agg(sum(when(col("dir") === 1, col("vol")).otherwise(0L)).as("buy_vol"),
-          sum(when(col("dir") === -1, col("vol")).otherwise(0L)).as("sell_vol"))
-        .withColumn("imbalance", abs(col("buy_vol") - col("sell_vol")))
-        .withColumn("bucket_vol", col("buy_vol") + col("sell_vol"))
-      val wV = Window.partitionBy("sym").orderBy("bucket").rowsBetween(-4, 0)
-      buckets
-        .withColumn("win_imb", sum("imbalance").over(wV))
-        .withColumn("win_vol", sum("bucket_vol").over(wV))
-        .withColumn("vpin_permille",
-          when(col("win_vol") > 0, expr("(1000 * win_imb) div win_vol")))
-        .select("sym", "bucket", "buy_vol", "sell_vol", "imbalance",
-          "bucket_vol", "vpin_permille")
-        .orderBy("sym", "bucket")
-    },
-    Some(withCte(s""",
+  val q181 = Q.sql("q181_vpin_toxicity",
+    withCte(s""",
     m AS (
       SELECT sym, seq, ${BookSql.mid} AS mid,
         CAST(COALESCE(bid1_size, 0.0::DOUBLE) + COALESCE(ask1_size, 0.0::DOUBLE) AS BIGINT) AS vol
@@ -638,7 +537,7 @@ object BookQueries {
     )
     SELECT sym, bucket, buy_vol, sell_vol, imbalance, bucket_vol,
       CASE WHEN win_vol > 0 THEN (1000 * win_imb) // win_vol END AS vpin_permille
-    FROM v ORDER BY sym, bucket""")))
+    FROM v ORDER BY sym, bucket"""))
 
   def all: Seq[Q] =
     Seq(q11, q12, q13, q14, q15, q16, q17, q18, q19, q20, q21, q47, q50, q176, q181)

@@ -110,24 +110,14 @@ object RelationalQueries {
     GROUP BY c_mktsegment
     ORDER BY c_mktsegment"""))
 
-  val q05 = Q("q05_inactive_customers",
-    (s, dir) => {
-      val c = Tables(s, dir, "customer")
-      val o = Tables(s, dir, "orders")
-      val n = Tables(s, dir, "nation")
-      c.join(o.filter(o("o_orderstatus") === "P"), c("c_custkey") === o("o_custkey"), "left_anti")
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(count(lit(1)).as("n_customers"), Exact.sumExactFast(col("c_acctbal"), 2).as("sum_acctbal"))
-        .orderBy("n_name")
-    },
-    Some(s"""SELECT n_name, COUNT(*) AS n_customers,
+  val q05 = Q.sql("q05_inactive_customers",
+    s"""SELECT n_name, COUNT(*) AS n_customers,
       ${Exact.sumExactSql("c_acctbal", 2)} AS sum_acctbal
     FROM customer
     JOIN nation ON c_nationkey = n_nationkey
     WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
     GROUP BY n_name
-    ORDER BY n_name"""))
+    ORDER BY n_name""")
 
   val q06 = Q.sql("q06_rollup_lineitem",
     s"""SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
@@ -160,43 +150,18 @@ object RelationalQueries {
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     ORDER BY o_custkey, order_seq"""))
 
-  val q08 = Q("q08_events_minute_agg",
-    (s, dir) => {
-      Tables(s, dir, "events")
-        .withColumn("minute", expr("(ts div 1000) div 60000000"))
-        .groupBy("minute", "event_type")
-        .agg(count(lit(1)).as("n"),
-          Exact.sumExactFast(col("value"), 2).as("sum_value"),
-          min("value").as("min_value"),
-          max("value").as("max_value"))
-        .orderBy("minute", "event_type")
-    },
-    Some(s"""SELECT epoch_us(ts) // 60000000 AS minute, event_type,
+  val q08 = Q.sql("q08_events_minute_agg",
+    s"""SELECT epoch_us(ts) // 60000000 AS minute, event_type,
       COUNT(*) AS n,
       ${Exact.sumExactSql("value", 2)} AS sum_value,
       MIN(value) AS min_value, MAX(value) AS max_value
     FROM events
     GROUP BY minute, event_type
-    ORDER BY minute, event_type"""),
+    ORDER BY minute, event_type""",
     headline = true)
 
-  val q09 = Q("q09_events_sessionize",
-    (s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      val gap = col("ts_us") - lag("ts_us", 1).over(w)
-      Tables(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("is_new", when(gap.isNull || gap > 1800000000L, lit(1)).otherwise(lit(0)))
-        .withColumn("session_id",
-          sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-          min("ts_us").as("session_start_us"),
-          max("ts_us").as("session_end_us"),
-          Exact.sumExactFast(col("value"), 2).as("session_value"))
-        .orderBy("user_id", "session_id")
-    },
-    Some(s"""WITH ev AS (
+  val q09 = Q.sql("q09_events_sessionize",
+    s"""WITH ev AS (
       SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events
     ), flagged AS (
       SELECT *, CASE WHEN ts_us - LAG(ts_us, 1) OVER w IS NULL
@@ -212,7 +177,7 @@ object RelationalQueries {
       ${Exact.sumExactSql("value", 2)} AS session_value
     FROM sessions
     GROUP BY user_id, session_id
-    ORDER BY user_id, session_id"""))
+    ORDER BY user_id, session_id""")
 
   // ---------------------------------------------------------------- q55
   /** q09's gap sessionization via Spark's NATIVE `session_window`
@@ -224,20 +189,8 @@ object RelationalQueries {
     * starts a NEW session), hence the `>= gap` flag below vs q09's
     * `> gap`.
     */
-  val q55 = Q("q55_session_window_native",
-    (s, dir) => {
-      val ev = Tables(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("ts_t", timestamp_micros(col("ts_us")))
-      ev.groupBy(col("user_id"), session_window(col("ts_t"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"), Exact.sumExactFast(col("value"), 2).as("session_value"))
-        .select(col("user_id"),
-          unix_micros(col("sw.start")).as("session_start_us"),
-          unix_micros(col("sw.end")).as("session_end_us"),
-          col("n_events"), col("session_value"))
-        .orderBy("user_id", "session_start_us")
-    },
-    Some(s"""WITH ev AS (
+  val q55 = Q.sql("q55_session_window_native",
+    s"""WITH ev AS (
       SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events
     ), flagged AS (
       SELECT *, CASE WHEN LAG(ts_us) OVER w IS NULL
@@ -252,7 +205,7 @@ object RelationalQueries {
       MAX(ts_us) + 1800000000 AS session_end_us,
       COUNT(*) AS n_events, ${Exact.sumExactSql("value", 2)} AS session_value
     FROM sessions GROUP BY user_id, sid
-    ORDER BY user_id, session_start_us"""))
+    ORDER BY user_id, session_start_us""")
 
   // ---------------------------------------------------------------- q56
   /** Exact per-group top-k through a custom [[TypedImperativeAggregate]]
@@ -288,18 +241,8 @@ object RelationalQueries {
     WHERE rk <= 3
     ORDER BY o_custkey, rk"""))
 
-  val q38 = Q("q38_events_json_topk",
-    (s, dir) => {
-      val kVal = regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1)
-      val w = Window.partitionBy("event_type").orderBy(desc("k_val"), col("event_id"))
-      Tables(s, dir, "events")
-        .withColumn("k_val", when(kVal =!= "", kVal.cast("long")))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 20)
-        .select("event_type", "rk", "event_id", "k_val")
-        .orderBy("event_type", "rk")
-    },
-    Some("""SELECT event_type, rk, event_id, k_val FROM (
+  val q38 = Q.sql("q38_events_json_topk",
+    """SELECT event_type, rk, event_id, k_val FROM (
       SELECT event_type, event_id,
         CASE WHEN regexp_extract(props, '"k":\s*(\d+)', 1) != ''
              THEN CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT) END AS k_val,
@@ -308,7 +251,7 @@ object RelationalQueries {
              THEN CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT) END DESC, event_id) AS rk
       FROM events)
     WHERE rk <= 20
-    ORDER BY event_type, rk"""))
+    ORDER BY event_type, rk""")
 
   /** Skew-salting pattern, verified exact: pre-aggregate on
     * (key, salt) then merge — decimal partials make the two-phase result
@@ -1221,24 +1164,8 @@ object RelationalQueries {
     * there, so the clamp also keeps the two engines bit-identical on
     * corpora spanning years.
     */
-  val q143 = Q("q143_recency_engagement",
-    (s, dir) => {
-      val ev = Tables(s, dir, "events")
-        .select(col("user_id"), col("value"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-      val mx = ev.agg(max("day").as("day_max"))
-      ev.crossJoin(broadcast(mx))
-        .withColumn("w", expr(
-          """CASE WHEN (day_max - day) div 7 >= 11 THEN 0L
-             ELSE shiftright(1024, CAST((day_max - day) div 7 AS INT)) END"""))
-        .withColumn("vc", expr("CAST(round(value * 100) AS BIGINT)"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("vc * w")).as("score_fp"),
-          sum("vc").as("raw_cents"))
-        .orderBy(col("score_fp").desc, col("user_id")).limit(15)
-    },
-    Some("""WITH ev AS (
+  val q143 = Q.sql("q143_recency_engagement",
+    """WITH ev AS (
       SELECT user_id, value, epoch_us(ts) // 86400000000 AS day FROM events
     ), mx AS (SELECT max(day) AS day_max FROM ev)
     SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
@@ -1249,7 +1176,7 @@ object RelationalQueries {
       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS raw_cents
     FROM ev, mx
     GROUP BY user_id
-    ORDER BY score_fp DESC, user_id LIMIT 15"""))
+    ORDER BY score_fp DESC, user_id LIMIT 15""")
 
   // --------------------------------------------------------------- q146
   /** Hourly burst detection — the monitoring rule that pages someone:
@@ -2001,34 +1928,8 @@ object RelationalQueries {
     * comes free from the table format's metadata layer; the row-derived
     * manifest here stands in so the oracle can verify the PLAN exactly.
     */
-  val q175 = Q("q175_compaction_planner",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem")
-      val manifest = li
-        .withColumn("part",
-          (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("long"))
-        .withColumn("fk", col("l_suppkey") % 16)
-        .groupBy("part", "fk")
-        .agg((count(lit(1)) * 64 + sum(col("l_quantity").cast("long"))).as("bytes"))
-      val tgt = manifest.agg(expr("(sum(bytes) div count(1)) * 4").as("target"))
-      val w = Window.partitionBy("part").orderBy(desc("bytes"), col("fk"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val binned = manifest.crossJoin(broadcast(tgt))
-        .withColumn("cum", sum("bytes").over(w))
-        .withColumn("bin", expr("(cum - bytes) div target"))
-      val bins = binned.groupBy("part", "target", "bin")
-        .agg(count(lit(1)).as("bf"), sum("bytes").as("bb"),
-          sum(when(col("bytes") * 2 < col("target"), 1L).otherwise(0L)).as("sf"))
-      bins.groupBy("part", "target")
-        .agg(sum("bf").as("n_files"), sum("sf").as("n_small_files"),
-          count(lit(1)).as("n_bins"), sum("bb").as("bytes_total"),
-          max("bb").as("max_bin_bytes"), min("bb").as("min_bin_bytes"))
-        .select(col("part"), col("n_files"), col("n_small_files"), col("n_bins"),
-          col("bytes_total"), col("max_bin_bytes"), col("min_bin_bytes"),
-          col("target").as("target_bytes"))
-        .orderBy("part")
-    },
-    Some("""WITH manifest AS (
+  val q175 = Q.sql("q175_compaction_planner",
+    """WITH manifest AS (
       SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT) AS part,
              l_suppkey % 16 AS fk,
              CAST(COUNT(*) * 64 + SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS bytes
@@ -2050,7 +1951,7 @@ object RelationalQueries {
       CAST(SUM(sf) AS BIGINT) AS n_small_files,
       CAST(COUNT(*) AS BIGINT) AS n_bins, CAST(SUM(bb) AS BIGINT) AS bytes_total,
       MAX(bb) AS max_bin_bytes, MIN(bb) AS min_bin_bytes, target AS target_bytes
-    FROM bins GROUP BY part, target ORDER BY part"""))
+    FROM bins GROUP BY part, target ORDER BY part""")
 
   // --------------------------------------------------------------- q179
   /** Snapshot-expiry + orphan-file audit — the VACUUM leg completing the
@@ -2074,39 +1975,8 @@ object RelationalQueries {
     * file-keyed equi. Snapshot expiry over a 100 TB table is a
     * manifest-only plan — the data files are never read, only deleted.
     */
-  val q179 = Q("q179_vacuum_audit",
-    (s, dir) => {
-      val R0 = 5; val CUR = 7 // retained snapshot window [R0, CUR]
-      val ledger = Tables(s, dir, "orders")
-        .groupBy(expr("o_orderkey div 5").as("file_id"))
-        .agg((count(lit(1)) * 128 +
-          sum(expr("cast(round(o_totalprice * 100, 0) as bigint)"))).as("bytes"))
-        .withColumn("added", col("file_id") % 8)
-        .withColumn("removed", col("added") + 1 + col("file_id") % 5)
-      val referenced = ledger
-        .filter(col("removed") > R0) // guard: sequence() must ascend
-        .withColumn("s", explode(expr(
-          s"sequence(greatest(added, $R0), least(removed - 1, $CUR))")))
-        .select("file_id").distinct().withColumn("ref", lit(1))
-      val disk = ledger.select(col("file_id"), col("bytes"), col("added"),
-          lit(0).as("orphan"))
-        .union(ledger.filter(col("file_id") % 11 === 3)
-          .select(col("file_id"), col("bytes"), col("added"), lit(1).as("orphan")))
-      disk.join(referenced, Seq("file_id"), "left")
-        .withColumn("status",
-          when(col("orphan") === 1, lit("orphan"))
-            .when(col("ref").isNotNull, lit("live"))
-            .otherwise(lit("expired")))
-        .groupBy(col("added").as("cohort"))
-        .agg(count(lit(1)).as("n_objects"),
-          sum(when(col("status") === "live", 1L).otherwise(0L)).as("n_live"),
-          sum(when(col("status") === "expired", 1L).otherwise(0L)).as("n_expired"),
-          sum(when(col("status") === "orphan", 1L).otherwise(0L)).as("n_orphans"),
-          sum(when(col("status") === "live", col("bytes")).otherwise(0L)).as("bytes_live"),
-          sum(when(col("status") =!= "live", col("bytes")).otherwise(0L)).as("bytes_reclaimable"))
-        .orderBy("cohort")
-    },
-    Some("""WITH ledger AS (
+  val q179 = Q.sql("q179_vacuum_audit",
+    """WITH ledger AS (
       SELECT o_orderkey // 5 AS file_id,
         CAST(COUNT(*) * 128 + SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS bytes
       FROM orders GROUP BY 1
@@ -2135,7 +2005,7 @@ object RelationalQueries {
       CAST(SUM(CASE WHEN status = 'orphan' THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
       CAST(SUM(CASE WHEN status = 'live' THEN bytes ELSE 0 END) AS BIGINT) AS bytes_live,
       CAST(SUM(CASE WHEN status != 'live' THEN bytes ELSE 0 END) AS BIGINT) AS bytes_reclaimable
-    FROM cls GROUP BY added ORDER BY cohort"""))
+    FROM cls GROUP BY added ORDER BY cohort""")
 
   def all: Seq[Q] =
     Seq(q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q38, q41, q42, q43, q45,

@@ -407,40 +407,8 @@ object IndexQueries {
     * MODEL table (vocabulary², not the corpus); the final join keys on
     * context — vocabulary-sized both sides.
     */
-  val q127 = Q("q127_next_token_accuracy",
-    (s, dir) => {
-      val tk = split(trim(col("text")), "\\s+")
-      val base = Tables(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), col("lang"),
-          (expr("doc_id * 2654435761") % 1000 < 900).as("is_train"), tk.as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("lang"), col("is_train"),
-          explode(expr(
-            "transform(sequence(1, size(tk) - 1), i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
-        .select(col("lang"), col("is_train"), col("b.w1"), col("b.w2"))
-      val counts = base.groupBy("lang", "w1", "w2")
-        .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("c_train"),
-          sum(when(col("is_train"), 0L).otherwise(1L)).as("c_eval"))
-      val model = counts.groupBy("w1", "w2")
-        .agg(sum("c_train").as("c"))
-        .filter(col("c") > 0)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("w1").orderBy(col("c").desc, col("w2"))))
-        .filter(col("rk") === 1)
-        .select(col("w1"), col("w2").as("pred"))
-      counts.filter(col("c_eval") > 0)
-        .join(broadcast(model), Seq("w1"), "left")
-        .groupBy("lang")
-        .agg(sum("c_eval").as("n_eval"),
-          sum(when(col("w2") === col("pred"), col("c_eval")).otherwise(0L)).as("n_hits"),
-          sum(when(col("pred").isNull, col("c_eval")).otherwise(0L)).as("n_oov_ctx"))
-        .select(col("lang"), col("n_eval"), col("n_hits"),
-          expr("n_hits * 1000 div n_eval").as("acc_permille"),
-          expr("n_oov_ctx * 1000 div n_eval").as("oov_ctx_permille"))
-        .orderBy("lang")
-    },
-    Some("""WITH base AS (
+  val q127 = Q.sql("q127_next_token_accuracy",
+    """WITH base AS (
       SELECT lang, (doc_id * 2654435761) % 1000 < 900 AS is_train,
         string_split_regex(trim(text), '\s+') AS tk
       FROM documents WHERE length(trim(text)) > 0
@@ -470,7 +438,7 @@ object IndexQueries {
         // CAST(SUM(c.c_eval) AS BIGINT) AS oov_ctx_permille
     FROM counts c LEFT JOIN model m ON m.w1 = c.w1
     WHERE c.c_eval > 0
-    GROUP BY c.lang ORDER BY c.lang"""))
+    GROUP BY c.lang ORDER BY c.lang""")
 
   // --------------------------------------------------------------- q140
   /** RAKE keyword extraction (Rose et al. 2010, the stopword-delimited
@@ -566,39 +534,8 @@ object IndexQueries {
     * The whole audit runs on the aggregated (context, next) count
     * table (q127's linearity argument): no second pass over tokens.
     */
-  val q144 = Q("q144_model_calibration",
-    (s, dir) => {
-      val tk = split(trim(col("text")), "\\s+")
-      val base = Tables(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          (expr("doc_id * 2654435761") % 1000 < 900).as("is_train"), tk.as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("is_train"),
-          explode(expr(
-            "transform(sequence(1, size(tk) - 1), i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
-        .select(col("is_train"), col("b.w1"), col("b.w2"))
-      val counts = base.groupBy("w1", "w2")
-        .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("c_train"),
-          sum(when(col("is_train"), 0L).otherwise(1L)).as("c_eval"))
-      val model = counts.filter(col("c_train") > 0)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("w1").orderBy(col("c_train").desc, col("w2"))))
-        .filter(col("rk") === 1)
-        .select(col("w1"), col("w2").as("pred"), col("c_train").as("conf"))
-      counts.filter(col("c_eval") > 0)
-        .join(broadcast(model), Seq("w1"))
-        .groupBy(expr(
-          "CAST(2 * (length(bin(conf)) - 1) + " +
-            "(CASE WHEN conf * 2 >= 3 * shiftleft(1, length(bin(conf)) - 1) THEN 1 ELSE 0 END) AS BIGINT)")
-          .as("conf_bucket"))
-        .agg(sum("c_eval").as("n_eval"),
-          sum(when(col("w2") === col("pred"), col("c_eval")).otherwise(0L)).as("n_hits"))
-        .withColumn("acc_permille", expr("n_hits * 1000 div n_eval"))
-        .select("conf_bucket", "n_eval", "n_hits", "acc_permille")
-        .orderBy("conf_bucket")
-    },
-    Some("""WITH base AS (
+  val q144 = Q.sql("q144_model_calibration",
+    """WITH base AS (
       SELECT (doc_id * 2654435761) % 1000 < 900 AS is_train,
         string_split_regex(trim(text), '\s+') AS tk
       FROM documents WHERE length(trim(text)) > 0
@@ -629,7 +566,7 @@ object IndexQueries {
     GROUP BY 2 * (length(bin(m.conf)) - 1) +
       (CASE WHEN m.conf * 2 >= 3 * (1 << (length(bin(m.conf)) - 1))
        THEN 1 ELSE 0 END)
-    ORDER BY conf_bucket"""))
+    ORDER BY conf_bucket""")
 
   // --------------------------------------------------------------- q145
   /** K-fold assignment + balance audit: deterministic 5-fold split by

@@ -38,49 +38,8 @@ object PipelineQueries {
     * mode goes through ONE explode + (doc, gram) groupBy — the shuffle
     * carries partial counts keyed by (doc, gram), never raw text.
     */
-  val q58 = Q("q58_repetition_quality",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents", spreadOk = true)
-      val lines = split(col("text"), "\n")
-      val base = docs.select(col("doc_id"), col("text"))
-        .withColumn("n_lines", size(lines).cast("long"))
-        .withColumn("n_distinct_lines", size(array_distinct(lines)).cast("long"))
-        .withColumn("toks", toks)
-        .withColumn("n_words",
-          when(length(trim(col("text"))) === 0, lit(0L)).otherwise(size(col("toks")).cast("long")))
-        .withColumn("tri", when(col("n_words") >= 3,
-          transform(sequence(lit(0), size(col("toks")) - 3),
-            i => concat_ws(" ", element_at(col("toks"), i + 1),
-              element_at(col("toks"), i + 2), element_at(col("toks"), i + 3))))
-          .otherwise(array().cast("array<string>")))
-        .withColumn("n_tri", size(col("tri")).cast("long"))
-        .withColumn("n_distinct_tri", size(array_distinct(col("tri"))).cast("long"))
-      // most-frequent 2-gram occupancy: explode once, count per (doc, gram),
-      // keep each document's max and total
-      val bi = base.filter(col("n_words") >= 2)
-        .select(col("doc_id"), explode(transform(sequence(lit(0), size(col("toks")) - 2),
-          i => concat_ws(" ", element_at(col("toks"), i + 1),
-            element_at(col("toks"), i + 2)))).as("gram"))
-        .groupBy("doc_id", "gram").agg(count(lit(1)).as("cnt"))
-        .groupBy("doc_id").agg(max("cnt").as("top_bigram_cnt"), sum("cnt").as("n_bigrams"))
-      base.join(bi, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_words"),
-          (lit(1.0) - col("n_distinct_lines").cast("double") / col("n_lines"))
-            .as("dup_line_frac"),
-          when(col("n_bigrams").isNotNull,
-            col("top_bigram_cnt").cast("double") / col("n_bigrams")).as("top2gram_frac"),
-          when(col("n_tri") > 0,
-            lit(1.0) - col("n_distinct_tri").cast("double") / col("n_tri")).as("dup3gram_frac"))
-        .withColumn("fail_dup_lines", (col("dup_line_frac") > 0.30).cast("int"))
-        .withColumn("fail_top2gram",
-          coalesce((col("top2gram_frac") > 0.20).cast("int"), lit(0)))
-        .withColumn("fail_dup3gram",
-          coalesce((col("dup3gram_frac") > 0.60).cast("int"), lit(0)))
-        .withColumn("quality_pass",
-          (col("fail_dup_lines") + col("fail_top2gram") + col("fail_dup3gram") === 0).cast("int"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH base AS (
+  val q58 = Q.sql("q58_repetition_quality",
+    s"""WITH base AS (
       SELECT doc_id, text,
         len(string_split(text, chr(10))) AS n_lines,
         len(list_distinct(string_split(text, chr(10)))) AS n_distinct_lines,
@@ -125,7 +84,7 @@ object PipelineQueries {
          + COALESCE(CAST(top2gram_frac > 0.20::DOUBLE AS INTEGER), 0)
          + COALESCE(CAST(dup3gram_frac > 0.60::DOUBLE AS INTEGER), 0) = 0
         AS INTEGER) AS quality_pass
-    FROM m ORDER BY doc_id"""),
+    FROM m ORDER BY doc_id""",
     headline = true)
 
   // ---------------------------------------------------------------- q59
@@ -189,24 +148,8 @@ object PipelineQueries {
     * Emits the 3-row split summary; the per-doc assignment is the same
     * expression inline.
     */
-  val q60 = Q("q60_dataset_split",
-    (s, dir) => {
-      val h = expr("(doc_id * 2654435761) % 1000")
-      val split = when(h < 900, lit("train")).when(h < 950, lit("val")).otherwise(lit("test"))
-      val docs = Tables(s, dir, "documents")
-        .withColumn("split", split)
-        .withColumn("n_tokens",
-          when(length(trim(coalesce(col("text"), lit("")))) === 0, lit(0L))
-            .otherwise(size(toks).cast("long")))
-      docs.groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("total_chars"),
-          sum("n_tokens").as("total_tokens"),
-          countDistinct("lang").as("n_langs"),
-          min("doc_id").as("min_doc_id"))
-        .orderBy("split")
-    },
-    Some(s"""WITH a AS (
+  val q60 = Q.sql("q60_dataset_split",
+    s"""WITH a AS (
       SELECT *,
         CASE WHEN (doc_id * 2654435761) % 1000 < 900 THEN 'train'
              WHEN (doc_id * 2654435761) % 1000 < 950 THEN 'val'
@@ -220,7 +163,7 @@ object PipelineQueries {
       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
       COUNT(DISTINCT lang) AS n_langs,
       MIN(doc_id) AS min_doc_id
-    FROM a GROUP BY split ORDER BY split"""))
+    FROM a GROUP BY split ORDER BY split""")
 
   // ---------------------------------------------------------------- q61
   /** TF-IDF top-terms per document, in pure integer arithmetic so the
@@ -335,27 +278,8 @@ object PipelineQueries {
     * per-stratum audit a pipeline needs: totals, kept counts, kept
     * token mass, and the realized permille vs the configured rate.
     */
-  val q63 = Q("q63_mixture_sample",
-    (s, dir) => {
-      val h = expr("(doc_id * 2654435761) % 1000")
-      val rate = when(col("lang") === "en", lit(500L))
-        .when(col("lang").isin("de", "fr", "es"), lit(250L))
-        .otherwise(lit(100L))
-      Tables(s, dir, "documents")
-        .withColumn("n_tokens",
-          when(length(trim(coalesce(col("text"), lit("")))) === 0, lit(0L))
-            .otherwise(size(toks).cast("long")))
-        .withColumn("rate_permille", rate)
-        .withColumn("kept", (h < rate).cast("int"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_total"),
-          sum("kept").as("n_kept"),
-          sum(col("kept") * col("n_tokens")).as("kept_tokens"),
-          max("rate_permille").as("rate_permille"),
-          expr("1000 * sum(kept) div count(1)").as("realized_permille"))
-        .orderBy("lang")
-    },
-    Some(s"""WITH a AS (
+  val q63 = Q.sql("q63_mixture_sample",
+    s"""WITH a AS (
       SELECT lang,
         CASE WHEN length(trim(text)) = 0 THEN 0
              ELSE len($toksSql) END AS n_tokens,
@@ -374,7 +298,7 @@ object PipelineQueries {
       CAST(SUM(kept * n_tokens) AS BIGINT) AS kept_tokens,
       CAST(MAX(rate_permille) AS BIGINT) AS rate_permille,
       CAST(1000 * SUM(kept) // COUNT(*) AS BIGINT) AS realized_permille
-    FROM a GROUP BY lang ORDER BY lang"""))
+    FROM a GROUP BY lang ORDER BY lang""")
 
   // ---------------------------------------------------------------- q64
   /** INCREMENTAL near-dedup — the ingestion shape: match a NEW batch
@@ -388,38 +312,8 @@ object PipelineQueries {
     * against itself. Each new doc reports its best base match
     * (min doc_id among verified matches) or drops out if none.
     */
-  val q64 = Q("q64_incremental_dedup",
-    (s, dir) => {
-      val nShingle = 8
-      val docs = Tables(s, dir, "documents", spreadOk = true)
-      // every 5th doc forms the incoming batch (deterministic and
-      // sf-independent); the rest is the existing corpus
-      val sig = docs
-        .withColumn("sig", expr(s"minhash_spans(text, $nShingle, 4)"))
-        .select(col("doc_id"), col("text"),
-          posexplode(array((0 to 3).map(k =>
-            TextMetrics.bandId((0 to 3).map(j =>
-              element_at(col("sig"), 4 * k + j + 1)))): _*)).as(Seq("band_idx", "bh")))
-      val base = sig.filter(col("doc_id") % 5 < 4)
-        .select(col("doc_id").as("base_id"), col("text").as("base_text"),
-          col("band_idx"), col("bh"))
-      val fresh = sig.filter(col("doc_id") % 5 === 4)
-        .select(col("doc_id").as("new_id"), col("text").as("new_text"),
-          col("band_idx"), col("bh"))
-      fresh.join(base, Seq("band_idx", "bh"))
-        .select("new_id", "new_text", "base_id", "base_text").distinct()
-        .withColumn("ov", expr(s"shingle_overlap(new_text, base_text, $nShingle)"))
-        .withColumn("jaccard",
-          when(col("ov.n_union") > 0,
-            col("ov.n_inter").cast("double") / col("ov.n_union")))
-        .filter(col("jaccard") >= 0.8)
-        .groupBy(col("new_id"))
-        .agg(min("base_id").as("matched_base_id"),
-          max("jaccard").as("best_jaccard"),
-          count(lit(1)).as("n_base_matches"))
-        .orderBy("new_id")
-    },
-    Some {
+  val q64 = Q.sql("q64_incremental_dedup",
+    {
       val sh = s"list_distinct(list_transform(generate_series(1, greatest(length(text) - 7, 1)), i -> substr(text, i, 8)))"
       val sigCols = (for { k <- 0 to 3; j <- 0 to 3 }
         yield s"min(substr(h$k, ${1 + 8 * j}, 8)) AS c${k}_$j").mkString(", ")
@@ -469,36 +363,8 @@ object PipelineQueries {
     * text, no all-pairs. At 100 TB the benchmark gram set (benchmarks
     * are MBs, corpora are TBs) still fits in every executor.
     */
-  val q66 = Q("q66_benchmark_decontam",
-    (s, dir) => {
-      val h = expr("(doc_id * 2654435761) % 1000")
-      val split = when(h < 900, lit("train")).when(h < 950, lit("val")).otherwise(lit("test"))
-      val base = Tables(s, dir, "documents")
-        .withColumn("split", split)
-        .withColumn("tk", toks)
-        .withColumn("nw",
-          when(length(trim(col("text"))) === 0, lit(0)).otherwise(size(col("tk"))))
-        .withColumn("grams", when(col("nw") >= 5,
-          array_distinct(transform(sequence(lit(0), col("nw") - 5), i =>
-            concat_ws(" ", (0 until 5).map(k => element_at(col("tk"), i + k + 1)): _*))))
-          .otherwise(array().cast("array<string>")))
-        .select(col("doc_id"), col("split"), col("grams"))
-      val bench = base.filter(col("split") === "test")
-        .select(explode(col("grams")).as("gram")).distinct()
-        .withColumn("hit", lit(1L))
-      base.filter(col("split") === "train")
-        .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
-          explode_outer(col("grams")).as("gram"))
-        .join(broadcast(bench), Seq("gram"), "left")
-        .groupBy("doc_id", "n_grams")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
-        .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
-          when(col("n_grams") > 0,
-            col("n_contaminated").cast("double") / col("n_grams")).as("contamination_frac"),
-          (col("n_contaminated") > 0).cast("int").as("contaminated"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH base AS (
+  val q66 = Q.sql("q66_benchmark_decontam",
+    s"""WITH base AS (
       SELECT doc_id,
         CASE WHEN (doc_id * 2654435761) % 1000 < 900 THEN 'train'
              WHEN (doc_id * 2654435761) % 1000 < 950 THEN 'val'
@@ -529,7 +395,7 @@ object PipelineQueries {
       CASE WHEN n_grams > 0
            THEN CAST(n_contaminated AS DOUBLE) / n_grams END AS contamination_frac,
       CAST(n_contaminated > 0 AS INTEGER) AS contaminated
-    FROM c ORDER BY doc_id"""),
+    FROM c ORDER BY doc_id""",
     headline = true)
 
   // ---------------------------------------------------------------- q74
@@ -818,34 +684,8 @@ object PipelineQueries {
     * the vocab build is the classic word-count shape and the audit adds
     * one map-side hash-probe pass — no extra shuffle of text.
     */
-  val q78 = Q("q78_vocab_oov",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val base = docs.select(col("doc_id"),
-        when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-          .otherwise(toks).as("tk"))
-      // the token stream feeds two consumers; both aggregate with
-      // map-side combine, and the repeated tokenize is CHEAPER than
-      // materializing the exploded stream (measured: a persist here
-      // costs +0.45 s at sf0.1 — the scan+split recompute wins)
-      val tok = base.select(col("doc_id"), explode(col("tk")).as("tok"))
-      val vocab = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("tok")).limit(16)
-        .select(col("tok"), lit(1).as("in_v"))
-      val st = tok.join(broadcast(vocab), Seq("tok"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_toks"),
-          sum(when(col("in_v").isNull, 1L).otherwise(0L)).as("n_oov"))
-      base.select("doc_id")
-        .join(st, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_toks"), lit(0L)).as("n_toks"),
-          coalesce(col("n_oov"), lit(0L)).as("n_oov"),
-          when(col("n_toks") > 0,
-            col("n_oov").cast("double") / col("n_toks")).as("oov_frac"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH base AS (
+  val q78 = Q.sql("q78_vocab_oov",
+    s"""WITH base AS (
       SELECT doc_id,
         CASE WHEN length(trim(text)) = 0 THEN [] ELSE $toksSql END AS tk
       FROM documents
@@ -863,7 +703,7 @@ object PipelineQueries {
     SELECT b.doc_id, COALESCE(st.n_toks, 0) AS n_toks,
       COALESCE(st.n_oov, 0) AS n_oov,
       CASE WHEN st.n_toks > 0 THEN CAST(st.n_oov AS DOUBLE) / st.n_toks END AS oov_frac
-    FROM base b LEFT JOIN st USING (doc_id) ORDER BY b.doc_id"""))
+    FROM base b LEFT JOIN st USING (doc_id) ORDER BY b.doc_id""")
 
   // ---------------------------------------------------------------- q79
   /** Cross-source contamination matrix: 3-gram Jaccard overlap between
@@ -874,39 +714,8 @@ object PipelineQueries {
     * source×source matrix is driver-sized. No document text crosses a
     * shuffle and there is no all-pairs join over documents anywhere.
     */
-  val q79 = Q("q79_source_overlap",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents", spreadOk = true)
-      val tri = docs.select(col("source"), col("text"))
-        .withColumn("tk", toks)
-        .withColumn("nw",
-          when(length(trim(col("text"))) === 0, lit(0)).otherwise(size(col("tk"))))
-        .filter(col("nw") >= 3)
-        .select(col("source"), explode(transform(sequence(lit(0), col("nw") - 3),
-          i => concat_ws(" ", element_at(col("tk"), i + 1),
-            element_at(col("tk"), i + 2), element_at(col("tk"), i + 3)))).as("gram"))
-        .distinct()
-      // NOTE: deliberately NOT persisted — the intersection self-join's
-      // two sides are identical subplans, so ReuseExchange already
-      // shares one shuffle between them; a persist here breaks that
-      // reuse and measured +0.85 s at sf0.1
-      val sz = tri.groupBy("source").agg(count(lit(1)).as("n_grams"))
-      val inter = tri.as("a")
-        .join(tri.as("b"),
-          col("a.gram") === col("b.gram") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      sz.select(col("source").as("source_a"), col("n_grams").as("n_a"))
-        .join(broadcast(sz.select(col("source").as("source_b"), col("n_grams").as("n_b"))),
-          col("source_a") < col("source_b"))
-        .join(inter, Seq("source_a", "source_b"), "left")
-        .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
-          coalesce(col("n_inter"), lit(0L)).as("n_inter"))
-        .withColumn("jaccard", col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")))
-        .orderBy("source_a", "source_b")
-    },
-    Some(s"""WITH base AS (
+  val q79 = Q.sql("q79_source_overlap",
+    s"""WITH base AS (
       SELECT source, $toksSql AS tk,
         CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($toksSql) END AS nw
       FROM documents
@@ -929,7 +738,7 @@ object PipelineQueries {
         (sa.n_grams + sb.n_grams - COALESCE(i.n_inter, 0)) AS jaccard
     FROM sz sa JOIN sz sb ON sa.source < sb.source
     LEFT JOIN inter i ON i.source_a = sa.source AND i.source_b = sb.source
-    ORDER BY source_a, source_b"""))
+    ORDER BY source_a, source_b""")
 
   // ---------------------------------------------------------------- q80
   /** PII scrub — the redaction pass every released corpus runs before
@@ -942,39 +751,8 @@ object PipelineQueries {
     * oracle pins the exact rewritten bytes, not just the counts. Pure
     * per-row projection — no shuffle at all, trivially 100 TB-shaped.
     */
-  val q80 = Q("q80_pii_redaction",
-    (s, dir) => {
-      val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ipPat = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-      val phonePat = "\\b555-\\d{4}\\b"
-      val idS = col("doc_id").cast("string")
-      val m = col("doc_id") % 5
-      val aug = concat(col("text"),
-        when(m === 0, concat(lit(" contact user"), idS, lit("@example.com now")))
-          .when(m === 1, concat(lit(" node 10."), (col("doc_id") % 200).cast("string"),
-            lit(".3."), (col("doc_id") % 250).cast("string"), lit(" up")))
-          .when(m === 2, concat(lit(" call 555-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"), lit(" today")))
-          .when(m === 3, concat(lit(" mail ops"), idS, lit("@mail.example.org via 192.168."),
-            (col("doc_id") % 100).cast("string"), lit(".7")))
-          .otherwise(lit("")))
-      Tables(s, dir, "documents", spreadOk = true)
-        .select(col("doc_id"), aug.as("t"))
-        .select(col("doc_id"),
-          regexp_count(col("t"), lit(emailPat)).cast("long").as("n_email"),
-          regexp_count(col("t"), lit(ipPat)).cast("long").as("n_ip"),
-          regexp_count(col("t"), lit(phonePat)).cast("long").as("n_phone"),
-          md5(regexp_replace(
-            regexp_replace(
-              regexp_replace(col("t"), emailPat, "<EMAIL>"),
-              ipPat, "<IP>"),
-            phonePat, "<PHONE>")).as("redacted_md5"))
-        .withColumn("pii_total", col("n_email") + col("n_ip") + col("n_phone"))
-        .withColumn("clean", (col("pii_total") === 0).cast("int"))
-        .select("doc_id", "n_email", "n_ip", "n_phone", "pii_total", "redacted_md5", "clean")
-        .orderBy("doc_id")
-    },
-    Some {
+  val q80 = Q.sql("q80_pii_redaction",
+    {
       val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val ipPat = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
       val phonePat = "\\b555-\\d{4}\\b"
@@ -1503,29 +1281,8 @@ object PipelineQueries {
     * chunk store / vector index would key on. Pure per-row explode:
     * no shuffle at all until the presentation sort.
     */
-  val q89 = Q("q89_rag_chunks",
-    (s, dir) => {
-      val W = 64
-      val S = 48
-      val docs = Tables(s, dir, "documents")
-      docs.select(col("doc_id"), col("text"))
-        .withColumn("tk", toks)
-        .withColumn("n_words",
-          when(length(trim(col("text"))) === 0, lit(0L))
-            .otherwise(size(col("tk")).cast("long")))
-        .filter(col("n_words") > 0)
-        .withColumn("nc",
-          expr(s"CAST(1 + (greatest(n_words - $W, 0) + ${S - 1}) div $S AS INT)"))
-        .withColumn("chunk_idx", explode(sequence(lit(0), col("nc") - 1)))
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          (col("chunk_idx") * S).cast("long").as("start_tok"),
-          least(col("n_words") - col("chunk_idx") * S, lit(W.toLong)).as("n_tok"),
-          md5(concat_ws(" ",
-            slice(col("tk"), col("chunk_idx") * S + 1, lit(W))).cast("binary"))
-            .as("chunk_md5"))
-        .orderBy("doc_id", "chunk_idx")
-    },
-    Some(s"""WITH base AS (
+  val q89 = Q.sql("q89_rag_chunks",
+    s"""WITH base AS (
       SELECT doc_id, $toksSql AS tk,
         CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($toksSql) END AS n_words
       FROM documents
@@ -1538,7 +1295,7 @@ object PipelineQueries {
       CAST(chunk_idx * 48 AS BIGINT) AS start_tok,
       CAST(least(n_words - chunk_idx * 48, 64) AS BIGINT) AS n_tok,
       md5(array_to_string(tk[chunk_idx * 48 + 1 : chunk_idx * 48 + 64], ' ')) AS chunk_md5
-    FROM c ORDER BY doc_id, chunk_idx"""))
+    FROM c ORDER BY doc_id, chunk_idx""")
 
   // ---------------------------------------------------------------- q90
   /** Temperature-scaled source mixture — the sampling-weight table a
@@ -1769,32 +1526,8 @@ object PipelineQueries {
     * shuffle keyed by doc_id only, text never leaves the map side
     * (statuses derive from md5 fingerprints computed at scan).
     */
-  val q96 = Q("q96_release_diff",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val hb = expr("(doc_id * 2654435761) % 1000")
-      val prev = docs.withColumn("hb", hb).filter(col("hb") < 980)
-        .select(col("doc_id"), col("source").as("source_p"),
-          md5(when(col("hb") >= 960, upper(col("text")))
-            .otherwise(col("text"))).as("fp_prev"),
-          length(col("text")).cast("long").as("len_p"))
-      val curr = docs.withColumn("hb", hb).filter(col("hb") >= 20)
-        .select(col("doc_id"), col("source").as("source_c"),
-          md5(col("text")).as("fp_curr"),
-          length(col("text")).cast("long").as("len_c"))
-      prev.join(curr, Seq("doc_id"), "full_outer")
-        .withColumn("status",
-          when(col("fp_curr").isNull, lit("removed"))
-            .when(col("fp_prev").isNull, lit("added"))
-            .when(col("fp_prev") =!= col("fp_curr"), lit("changed"))
-            .otherwise(lit("unchanged")))
-        .withColumn("source", coalesce(col("source_c"), col("source_p")))
-        .groupBy("source", "status")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(coalesce(col("len_c"), col("len_p"))).as("sum_chars"))
-        .orderBy("source", "status")
-    },
-    Some("""WITH prev AS (
+  val q96 = Q.sql("q96_release_diff",
+    """WITH prev AS (
       SELECT doc_id, source AS source_p,
         md5(CASE WHEN (doc_id * 2654435761) % 1000 >= 960
                  THEN upper(text) ELSE text END) AS fp_prev,
@@ -1813,7 +1546,7 @@ object PipelineQueries {
       COUNT(*) AS n_docs,
       CAST(SUM(COALESCE(len_c, len_p)) AS BIGINT) AS sum_chars
     FROM prev FULL OUTER JOIN curr USING (doc_id)
-    GROUP BY 1, 2 ORDER BY source, status"""))
+    GROUP BY 1, 2 ORDER BY source, status""")
 
   // ---------------------------------------------------------------- q97
   /** PMI collocation mining — the top-50 word pairs whose adjacency is
@@ -2009,32 +1742,8 @@ object PipelineQueries {
     * map-side-combined per-bucket rollup; every figure is integer math
     * plus single IEEE divisions.
     */
-  val q107 = Q("q107_bucketed_batching",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val nt = docs.select(
-        when(length(trim(col("text"))) === 0, lit(0L))
-          .otherwise(size(toks).cast("long")).as("n_toks"))
-      nt.withColumn("ctx",
-          when(col("n_toks") <= 64, 64L).when(col("n_toks") <= 128, 128L)
-            .when(col("n_toks") <= 256, 256L).otherwise(512L))
-        .withColumn("kept", least(col("n_toks"), lit(512L)))
-        .groupBy("ctx")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("kept").as("sum_toks"),
-          sum(lit(512L) - col("kept")).as("pad_single"))
-        .withColumn("batch_size", expr("4096 div ctx"))
-        .withColumn("n_batches",
-          expr("(n_docs + (4096 div ctx) - 1) div (4096 div ctx)"))
-        .withColumn("pad_bucketed", col("ctx") * col("n_docs") - col("sum_toks"))
-        .withColumn("waste_frac",
-          col("pad_bucketed").cast("double") / (col("ctx") * col("n_docs")))
-        .withColumn("saving_vs_single",
-          (col("pad_single") - col("pad_bucketed")).cast("double") /
-            (lit(512L) * col("n_docs")))
-        .orderBy("ctx")
-    },
-    Some(s"""WITH nt AS (
+  val q107 = Q.sql("q107_bucketed_batching",
+    s"""WITH nt AS (
       SELECT CASE WHEN length(trim(text)) = 0 THEN 0
                   ELSE len($toksSql) END AS n_toks
       FROM documents
@@ -2057,7 +1766,7 @@ object PipelineQueries {
       CAST(ctx * n_docs - sum_toks AS DOUBLE) / (ctx * n_docs) AS waste_frac,
       CAST(pad_single - (ctx * n_docs - sum_toks) AS DOUBLE) / (512 * n_docs)
         AS saving_vs_single
-    FROM agg ORDER BY ctx"""))
+    FROM agg ORDER BY ctx""")
 
   // --------------------------------------------------------------- q113
   /** Contamination SPAN excision map — q66 tells you WHICH train docs

@@ -27,17 +27,6 @@ object TextMetrics {
   def classCount(text: Column, charClass: String): Column =
     length(text) - length(regexp_replace(text, charClass, ""))
 
-  /** Occurrences of a literal word with single-space padding (counts
-    * ` word ` hits in ` text `, non-overlapping left-to-right). The
-    * length difference is an exact multiple of the pattern length, so the
-    * double division is integer-valued and the long cast exact.
-    */
-  def wordOccurrences(text: Column, word: String): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    val w = s" $word "
-    ((length(padded) - length(regexp_replace(padded, w, ""))) / lit(w.length)).cast("long")
-  }
-
   /** Distinct character n-gram (shingle) array; degenerate short texts
     * yield the single truncated shingle.
     */
@@ -103,7 +92,4 @@ object TextMetrics {
     "de" -> Seq("der", "und"),
     "fr" -> Seq("le", "les"),
     "zh" -> Seq("de", "shi"))
-
-  def langScore(text: Column, lang: String): Column =
-    langMarkers.toMap.apply(lang).map(wordOccurrences(text, _)).reduce(_ + _)
 }

@@ -27,35 +27,8 @@ object TextQueries {
   }
 
   // ---------------------------------------------------------------- q27
-  val q27 = Q("q27_text_stats",
-    (s, dir) => {
-      // ONE tokenize pass: token count, char mass, and stopword hits all
-      // derive from a single split array (the per-stopword regexp_replace
-      // scans cost ~6 full text traversals per row)
-      val t = col("text")
-      // sort-early: a trailing sort would range-sample (re-execute) the
-      // tokenize projection; sorting the base table first runs it once
-      Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("toks", split(trim(lower(t)), "\\s+"))
-        .withColumn("n_tokens",
-          when(length(trim(t)) === 0, lit(0L)).otherwise(size(col("toks")).cast("long")))
-        .withColumn("chars_no_ws",
-          aggregate(col("toks"), lit(0L), (acc, x) => acc + length(x)))
-        .withColumn("n_stopwords",
-          size(filter(col("toks"), x => x === "the" || x === "and" || x === "of")).cast("long"))
-        .withColumn("avg_token_len",
-          when(col("n_tokens") > 0, col("chars_no_ws").cast("double") / col("n_tokens")))
-        .withColumn("stop_ratio",
-          when(col("n_tokens") > 0, col("n_stopwords").cast("double") / col("n_tokens")))
-        .withColumn("quality_score",
-          when(col("n_tokens") > 0,
-            lit(0.5) * least(lit(1.0), col("n_tokens") / lit(200.0)) +
-              lit(0.3) * least(lit(1.0), col("stop_ratio") * lit(10.0)) +
-              lit(0.2) * least(lit(1.0), col("chars_no_ws") / lit(400.0))).otherwise(lit(0.0)))
-        .select("doc_id", "lang", "source", "n_tokens", "chars_no_ws", "n_stopwords",
-          "avg_token_len", "stop_ratio", "quality_score")
-    },
-    Some(s"""WITH tk AS (
+  val q27 = Q.sql("q27_text_stats",
+    s"""WITH tk AS (
       SELECT doc_id, lang, source, length(trim(text)) AS trimmed_len,
         string_split_regex(trim(lower(text)), '\\s+') AS toks
       FROM documents
@@ -77,27 +50,12 @@ object TextQueries {
               + 0.3::DOUBLE * least(1.0::DOUBLE, stop_ratio * 10.0::DOUBLE)
               + 0.2::DOUBLE * least(1.0::DOUBLE, chars_no_ws / 400.0::DOUBLE)
            ELSE 0.0::DOUBLE END AS quality_score
-    FROM r ORDER BY doc_id"""),
+    FROM r ORDER BY doc_id""",
     headline = true)
 
   // ---------------------------------------------------------------- q28
-  val q28 = Q("q28_lang_id",
-    (s, dir) => {
-      val t = col("text")
-      val scored = Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumns(TextMetrics.langMarkers.map { case (l, _) =>
-          s"s_$l" -> TextMetrics.langScore(t, l)
-        }.toMap)
-      val pred = when(col("s_en") >= greatest(col("s_es"), col("s_de"), col("s_fr"), col("s_zh")), lit("en"))
-        .when(col("s_es") >= greatest(col("s_de"), col("s_fr"), col("s_zh")), lit("es"))
-        .when(col("s_de") >= greatest(col("s_fr"), col("s_zh")), lit("de"))
-        .when(col("s_fr") >= col("s_zh"), lit("fr"))
-        .otherwise(lit("zh"))
-      scored.withColumn("pred_lang", pred)
-        .withColumn("is_match", (col("pred_lang") === col("lang")).cast("int"))
-        .select("doc_id", "lang", "s_en", "s_es", "s_de", "s_fr", "s_zh", "pred_lang", "is_match")
-    },
-    Some {
+  val q28 = Q.sql("q28_lang_id",
+    {
       val scores = TextMetrics.langMarkers.map { case (l, words) =>
         words.map(occSql).mkString(" + ") + s" AS s_$l"
       }.mkString(",\n        ")
@@ -127,38 +85,16 @@ object TextQueries {
     FROM documents GROUP BY fp ORDER BY fp""")
 
   // ---------------------------------------------------------------- q30
-  val q30 = Q("q30_shingle_stats",
-    (s, dir) => {
-      // distinctness is PER-DOCUMENT: the native shingle_agg kernel
-      // (functions.TextKernels) counts distinct shingles in one O(len)
-      // hash-set pass per row — no explode, no shuffle, and none of the
-      // O(len²) cost of array_distinct on non-primitive arrays
-      Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("sa", expr(s"shingle_agg(text, $N)"))
-        .select(col("doc_id"), col("sa.n_positions").as("n_positions"),
-          col("sa.n_distinct").as("n_distinct"))
-        .withColumn("distinct_ratio", col("n_distinct").cast("double") / col("n_positions"))
-    },
-    Some(s"""SELECT doc_id,
+  val q30 = Q.sql("q30_shingle_stats",
+    s"""SELECT doc_id,
       CAST(greatest(length(text) - ${N - 1}, 1) AS BIGINT) AS n_positions,
       CAST(len($shinglesSqlExpr) AS BIGINT) AS n_distinct,
       CAST(len($shinglesSqlExpr) AS DOUBLE) / greatest(length(text) - ${N - 1}, 1) AS distinct_ratio
-    FROM documents ORDER BY doc_id"""))
+    FROM documents ORDER BY doc_id""")
 
   // ---------------------------------------------------------------- q31
-  val q31 = Q("q31_minhash_signatures",
-    (s, dir) => {
-      // ONE md5 per shingle; the 4 signature components are mins over
-      // disjoint 8-hex-char (32-bit) spans of it — computed per-document
-      // by the native minhash_spans kernel (functions.TextKernels): one
-      // O(len) loop per row, no shingle explode, no signature shuffle.
-      Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("sig", expr(s"minhash_spans(text, $N, 0)"))
-        .select(col("doc_id") +:
-          (0 to 3).map(j => element_at(col("sig"), j + 1).as(s"mh$j")): _*)
-        .withColumn("band", TextMetrics.bandId((0 to 3).map(j => col(s"mh$j"))))
-    },
-    Some(s"""WITH sh AS (
+  val q31 = Q.sql("q31_minhash_signatures",
+    s"""WITH sh AS (
       SELECT doc_id, md5(unnest($shinglesSqlExpr)) AS h FROM documents
     ), m AS (
       SELECT doc_id,
@@ -166,22 +102,12 @@ object TextQueries {
       FROM sh GROUP BY doc_id
     )
     SELECT doc_id, mh0, mh1, mh2, mh3, md5(mh0 || mh1 || mh2 || mh3) AS band
-    FROM m ORDER BY doc_id"""),
+    FROM m ORDER BY doc_id""",
     headline = true)
 
   // ---------------------------------------------------------------- q32
-  val q32 = Q("q32_simhash",
-    (s, dir) => {
-      // whole SimHash per document in the native shingle_agg kernel:
-      // distinct shingles via hash set, one md5 each, 32 hex-digit votes
-      // — no explode, no 33-aggregate shuffle (and none of the global
-      // .distinct() that regressed this query 3.4× in round 2)
-      Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("sa", expr(s"shingle_agg(text, $N)"))
-        .select(col("doc_id"), col("sa.n_distinct").as("n_shingles"),
-          col("sa.simhash").as("simhash"))
-    },
-    Some {
+  val q32 = Q.sql("q32_simhash",
+    {
       val votes = (1 to 32)
         .map(j => s"SUM(CASE WHEN substr(h, $j, 1) >= '8' THEN 1 ELSE -1 END) AS v$j")
         .mkString(",\n        ")
@@ -386,23 +312,14 @@ object TextQueries {
       out
   }
 
-  val q48 = Q("q48_minhash_lsh_dedup",
-    (s, dir) => {
-      val labels = dedupGroups(s, dir)
-      val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("group_size"))
-      labels.join(sizes, "comp")
-        .select(col("doc_id"), col("comp").as("group_id"),
-          (col("doc_id") === col("comp")).cast("int").as("is_kept"),
-          col("group_size"))
-        .orderBy("doc_id")
-    },
-    Some(s"""$dedupCteSql, gs AS (
+  val q48 = Q.sql("q48_minhash_lsh_dedup",
+    s"""$dedupCteSql, gs AS (
       SELECT group_id, COUNT(*) AS group_size FROM comp GROUP BY group_id
     )
     SELECT c.doc_id, c.group_id,
       CAST(c.doc_id = c.group_id AS INTEGER) AS is_kept, gs.group_size
     FROM comp c JOIN gs USING (group_id)
-    ORDER BY doc_id"""),
+    ORDER BY doc_id""",
     headline = true)
 
   /** Oracle mirror of [[dedupCandidates]]: the WITH-chain body ending in
@@ -468,19 +385,8 @@ object TextQueries {
     * detection. All integer arithmetic mod 1e9+7 (products stay < 2⁶³,
     * so ANSI long math never overflows and both engines agree exactly).
     */
-  val q53 = Q("q53_rolling_fingerprint",
-    (s, dir) => {
-      // native prefix-hash kernel: O(1) per window via
-      // w[i] = (h[i+8] − h[i]·B⁸) mod M — see functions.RollingHash for
-      // the identity making it bit-equal to the oracle's per-window
-      // Horner mirror
-      Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("rh", expr("rolling_hash(text, 8, 131, 1000000007)"))
-        .select(col("doc_id"), col("rh.doc_fp").as("doc_fp"),
-          size(col("rh.wins")).cast("long").as("n_windows"),
-          size(array_distinct(col("rh.wins"))).cast("long").as("n_distinct_win"))
-    },
-    Some(s"""WITH c AS (
+  val q53 = Q.sql("q53_rolling_fingerprint",
+    s"""WITH c AS (
       SELECT doc_id,
         list_transform(generate_series(1, length(text)), i ->
           CAST(ascii(substr(text, i, 1)) AS BIGINT)) AS codes,
@@ -498,7 +404,7 @@ object TextQueries {
     SELECT doc_id, doc_fp,
       CAST(len(rolling) AS BIGINT) AS n_windows,
       CAST(len(list_distinct(rolling)) AS BIGINT) AS n_distinct_win
-    FROM r ORDER BY doc_id"""))
+    FROM r ORDER BY doc_id""")
 
   // ---------------------------------------------------------------- q51
   /** Dedup KEEP POLICY variant: instead of "keep the representative",
@@ -508,22 +414,8 @@ object TextQueries {
     * the policy itself is one max-per-group + one tie-broken argmax,
     * both partial-aggregable.
     */
-  val q51 = Q("q51_dedup_keep_longest",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents").select(col("doc_id"), col("n_chars"))
-      val scored = dedupGroups(s, dir)
-        .withColumnRenamed("comp", "group_id")
-        .join(docs, "doc_id")
-      val best = scored.groupBy("group_id").agg(max("n_chars").as("best_chars"))
-      val keep = scored.join(best, "group_id")
-        .filter(col("n_chars") === col("best_chars"))
-        .groupBy("group_id").agg(min("doc_id").as("keep_id"))
-      scored.join(keep, "group_id")
-        .select(col("doc_id"), col("group_id"), col("n_chars"), col("keep_id"),
-          (col("doc_id") === col("keep_id")).cast("int").as("is_kept"))
-        .orderBy("doc_id")
-    },
-    Some(s"""$dedupCteSql, scored AS (
+  val q51 = Q.sql("q51_dedup_keep_longest",
+    s"""$dedupCteSql, scored AS (
       SELECT c.doc_id, c.group_id, d.n_chars
       FROM comp c JOIN documents d USING (doc_id)
     ), best AS (
@@ -536,7 +428,7 @@ object TextQueries {
     SELECT s.doc_id, s.group_id, s.n_chars, k.keep_id,
       CAST(s.doc_id = k.keep_id AS INTEGER) AS is_kept
     FROM scored s JOIN keep k USING (group_id)
-    ORDER BY s.doc_id"""))
+    ORDER BY s.doc_id""")
 
   // ---------------------------------------------------------------- q57
   // BPE-style regex pre-tokenization (the GPT-2 pattern family, made
@@ -555,26 +447,8 @@ object TextQueries {
   private val bpePatSql =
     raw"""''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^ \t\n\x0B\f\r\p{L}\p{N}]+|[ \t\n\x0B\f\r]+"""
 
-  val q57 = Q("q57_bpe_tokens",
-    (s, dir) => {
-      val cls = Map(
-        "n_word" -> "^ ?\\p{L}+$", "n_number" -> "^ ?\\p{N}+$",
-        "n_punct" -> s"^ ?[^$wsCls\\p{L}\\p{N}]+$$", "n_contraction" -> "^'(?:s|t|re|ve|m|ll|d)$",
-        "n_ws" -> s"^[$wsCls]+$$")
-      val base = Tables(s, dir, "documents").orderBy("doc_id")
-        .withColumn("toks", regexp_extract_all(col("text"), lit(bpePat), lit(0)))
-      val withCls = cls.toSeq.sortBy(_._1).foldLeft(base) { case (df, (name, pat)) =>
-        df.withColumn(name, size(filter(col("toks"), t => t.rlike(pat))).cast("long"))
-      }
-      withCls
-        .withColumn("n_bpe_tokens", size(col("toks")).cast("long"))
-        .withColumn("n_distinct", size(array_distinct(col("toks"))).cast("long"))
-        .withColumn("avg_token_chars",
-          when(col("n_bpe_tokens") > 0, length(col("text")).cast("double") / col("n_bpe_tokens")))
-        .select("doc_id", "lang", "n_bpe_tokens", "n_word", "n_number", "n_punct",
-          "n_contraction", "n_ws", "n_distinct", "avg_token_chars")
-    },
-    Some(s"""WITH tk AS (
+  val q57 = Q.sql("q57_bpe_tokens",
+    s"""WITH tk AS (
       SELECT doc_id, lang, length(text) AS n_chars,
         regexp_extract_all(text, '$bpePatSql') AS toks
       FROM documents
@@ -593,7 +467,7 @@ object TextQueries {
       CAST(n_punct AS BIGINT) AS n_punct, CAST(n_contraction AS BIGINT) AS n_contraction,
       CAST(n_ws AS BIGINT) AS n_ws, CAST(n_distinct AS BIGINT) AS n_distinct,
       CASE WHEN n_bpe_tokens > 0 THEN CAST(n_chars AS DOUBLE) / n_bpe_tokens END AS avg_token_chars
-    FROM c ORDER BY doc_id"""))
+    FROM c ORDER BY doc_id""")
 
   // ---------------------------------------------------------------- q67
   /** SimHash NEAR-DUP PAIRS — the q32 fingerprint put to work (Manku,
@@ -747,25 +621,8 @@ object TextQueries {
     * per-doc split flags, one partial-aggregable groupBy — nothing
     * beyond what q48 already paid.
     */
-  val q73 = Q("q73_split_leakage",
-    (s, dir) => {
-      val h = expr("(doc_id * 2654435761) % 1000")
-      val split = when(h < 900, lit("train")).when(h < 950, lit("val")).otherwise(lit("test"))
-      val flags = Tables(s, dir, "documents").select(col("doc_id"), split.as("split"))
-      dedupGroups(s, dir).withColumnRenamed("comp", "group_id")
-        .join(flags, "doc_id")
-        .groupBy("group_id")
-        .agg(count(lit(1)).as("n_members"),
-          sum((col("split") === "train").cast("long")).as("n_train"),
-          sum((col("split") === "val").cast("long")).as("n_val"),
-          sum((col("split") === "test").cast("long")).as("n_test"),
-          countDistinct("split").as("n_splits"))
-        .filter(col("n_members") > 1)
-        .withColumn("leaked", (col("n_splits") > 1).cast("int"))
-        .select("group_id", "n_members", "n_train", "n_val", "n_test", "leaked")
-        .orderBy("group_id")
-    },
-    Some(s"""$dedupCteSql, fl AS (
+  val q73 = Q.sql("q73_split_leakage",
+    s"""$dedupCteSql, fl AS (
       SELECT doc_id,
         CASE WHEN (doc_id * 2654435761) % 1000 < 900 THEN 'train'
              WHEN (doc_id * 2654435761) % 1000 < 950 THEN 'val'
@@ -782,7 +639,7 @@ object TextQueries {
     )
     SELECT group_id, n_members, n_train, n_val, n_test,
       CAST(n_splits > 1 AS INTEGER) AS leaked
-    FROM g WHERE n_members > 1 ORDER BY group_id"""))
+    FROM g WHERE n_members > 1 ORDER BY group_id""")
 
   // ---------------------------------------------------------------- q69
   /** Content-defined chunking + SUB-DOCUMENT dedup (the FastCDC/rsync
@@ -1159,29 +1016,8 @@ object TextQueries {
     * every ratio is a single IEEE division of exact BIGINT sums, so
     * the rollup is engine-exact at any corpus size.
     */
-  val q93 = Q("q93_tokenizer_fertility",
-    (s, dir) => {
-      val t = col("text")
-      Tables(s, dir, "documents")
-        .withColumn("n_tokens",
-          size(regexp_extract_all(t, lit(bpePat), lit(0))).cast("long"))
-        .withColumn("n_words", when(length(trim(t)) === 0, lit(0L))
-          .otherwise(size(split(trim(lower(t)), "\\s+")).cast("long")))
-        .withColumn("n_chars", length(t).cast("long"))
-        .withColumn("n_bytes", octet_length(t).cast("long"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_words").as("sum_words"), sum("n_tokens").as("sum_tokens"),
-          sum("n_chars").as("sum_chars"), sum("n_bytes").as("sum_bytes"))
-        .withColumn("fertility", when(col("sum_words") > 0,
-          col("sum_tokens").cast("double") / col("sum_words")))
-        .withColumn("chars_per_token", when(col("sum_tokens") > 0,
-          col("sum_chars").cast("double") / col("sum_tokens")))
-        .withColumn("bytes_per_token", when(col("sum_tokens") > 0,
-          col("sum_bytes").cast("double") / col("sum_tokens")))
-        .orderBy("lang")
-    },
-    Some(s"""WITH tk AS (
+  val q93 = Q.sql("q93_tokenizer_fertility",
+    s"""WITH tk AS (
       SELECT lang,
         len(regexp_extract_all(text, '$bpePatSql')) AS n_tokens,
         CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1200,7 +1036,7 @@ object TextQueries {
       CASE WHEN sum_words > 0 THEN CAST(sum_tokens AS DOUBLE) / sum_words END AS fertility,
       CASE WHEN sum_tokens > 0 THEN CAST(sum_chars AS DOUBLE) / sum_tokens END AS chars_per_token,
       CASE WHEN sum_tokens > 0 THEN CAST(sum_bytes AS DOUBLE) / sum_tokens END AS bytes_per_token
-    FROM g ORDER BY lang"""))
+    FROM g ORDER BY lang""")
 
   // --------------------------------------------------------------- q102
   /** MinHash calibration audit — "how much should we trust the sketch":
@@ -1275,24 +1111,8 @@ object TextQueries {
     * move ~8/9. `n_moved / n_docs` per shard is the observable that
     * makes the routing safe to scale out under load.
     */
-  val q103 = Q("q103_hrw_sharding",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      def shardExpr(nShards: Int): String =
-        s"array_max(transform(sequence(0, ${nShards - 1}), sh -> " +
-          "struct(md5(concat(cast(doc_id as string), '#', cast(sh as string))) as h, " +
-          "cast(sh as bigint) as sh))).sh"
-      docs.select(col("doc_id"), col("n_chars"),
-          expr(shardExpr(8)).as("shard"), expr(shardExpr(9)).as("shard9"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          sum(when(col("shard9") =!= col("shard"), 1L).otherwise(0L)).as("n_moved"))
-        .withColumn("moved_frac",
-          col("n_moved").cast("double") / col("n_docs"))
-        .orderBy("shard")
-    },
-    Some("""WITH x AS (
+  val q103 = Q.sql("q103_hrw_sharding",
+    """WITH x AS (
       SELECT doc_id, n_chars, sh,
         md5(CAST(doc_id AS VARCHAR) || '#' || CAST(sh AS VARCHAR)) AS h
       FROM documents, (SELECT unnest(generate_series(0, 8)) AS sh)
@@ -1316,7 +1136,7 @@ object TextQueries {
       CAST(SUM(CASE WHEN shard9 != shard THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
       CAST(SUM(CASE WHEN shard9 != shard THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
         AS moved_frac
-    FROM a GROUP BY shard ORDER BY shard"""))
+    FROM a GROUP BY shard ORDER BY shard""")
 
   /** q70's per-document filter verdicts as a reusable oracle fragment
     * (q70, q106): WITH chain ending in
@@ -1424,28 +1244,8 @@ object TextQueries {
     * partial-aggregable count over edge endpoints; the ranking window
     * partitions by component — bounded by group size, never the corpus.
     */
-  val q104 = Q("q104_canonical_rank",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val labels = dedupGroups(s, dir)
-      val ver = dedupEdges(s, dir)
-      val deg = ver.select(col("id_a").as("doc_id"))
-        .union(ver.select(col("id_b").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("degree"))
-      val wC = Window.partitionBy("comp").orderBy(desc("degree"), col("doc_id"))
-      labels.join(deg, Seq("doc_id"), "left")
-        .withColumn("degree", coalesce(col("degree"), lit(0L)))
-        .withColumn("rnk", row_number().over(wC).cast("long"))
-        .withColumn("sz", count(lit(1)).over(
-          Window.partitionBy("comp")))
-        .filter(col("sz") > 1)
-        .select(col("comp").as("group_id"), col("doc_id"), col("degree"),
-          col("rnk"), (col("rnk") === 1).cast("int").as("is_canonical"),
-          (col("rnk") === 1 && col("doc_id") =!= col("comp"))
-            .cast("int").as("min_id_disagrees"))
-        .orderBy("group_id", "rnk")
-    },
-    Some(s"""$dedupCteSql, deg AS (
+  val q104 = Q.sql("q104_canonical_rank",
+    s"""$dedupCteSql, deg AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS degree FROM (
         SELECT id_a AS doc_id FROM ver
         UNION ALL SELECT id_b AS doc_id FROM ver
@@ -1461,7 +1261,7 @@ object TextQueries {
       CAST(rk AS BIGINT) AS rnk,
       CAST(rk = 1 AS INTEGER) AS is_canonical,
       CAST(rk = 1 AND doc_id != group_id AS INTEGER) AS min_id_disagrees
-    FROM g WHERE sz > 1 ORDER BY group_id, rnk"""))
+    FROM g WHERE sz > 1 ORDER BY group_id, rnk""")
 
   // --------------------------------------------------------------- q105
   /** Quality-vs-duplication lift — do the repetition-quality screens
@@ -1476,25 +1276,8 @@ object TextQueries {
     * Shape: composes two memoized/owned operator outputs on a doc_id
     * equi-join, then a 2-row rollup. Rates are single IEEE divisions.
     */
-  val q105 = Q("q105_quality_dup_lift",
-    (s, dir) => {
-      val qual = PipelineQueries.q58.run(s, dir)
-        .select(col("doc_id"), col("quality_pass"))
-      val labels = dedupGroups(s, dir)
-      val sizes = labels.groupBy("comp").agg(count(lit(1)).as("sz"))
-      val dup = labels.join(sizes, "comp")
-        .select(col("doc_id"),
-          (col("sz") > 1 && col("doc_id") =!= col("comp"))
-            .cast("long").as("is_redundant"))
-      qual.join(dup, "doc_id")
-        .groupBy("quality_pass")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("is_redundant").as("n_redundant"))
-        .withColumn("redundant_rate",
-          col("n_redundant").cast("double") / col("n_docs"))
-        .orderBy("quality_pass")
-    },
-    Some(s"""$dedupCteSql, sz AS (
+  val q105 = Q.sql("q105_quality_dup_lift",
+    s"""$dedupCteSql, sz AS (
       SELECT group_id, COUNT(*) AS n FROM comp GROUP BY group_id
     ), dup AS (
       SELECT c.doc_id,
@@ -1505,7 +1288,7 @@ object TextQueries {
       CAST(SUM(d.is_redundant) AS BIGINT) AS n_redundant,
       CAST(SUM(d.is_redundant) AS DOUBLE) / COUNT(*) AS redundant_rate
     FROM qualf q JOIN dup d USING (doc_id)
-    GROUP BY q.k_qual ORDER BY quality_pass"""))
+    GROUP BY q.k_qual ORDER BY quality_pass""")
 
   // --------------------------------------------------------------- q106
   /** Filter-overlap contingency — before multiplying curation filters,
@@ -1724,29 +1507,8 @@ object TextQueries {
     * No small-range correction (needs ln): registers are saturated at
     * every gate scale, and `n_empty_regs` makes that visible.
     */
-  val q110 = Q("q110_hll_distinct_audit",
-    (s, dir) => {
-      val sh = Tables(s, dir, "documents")
-        .select(col("source"), explode(expr(s"shingle_hash48(text, $N)")).as("v"))
-      // rho: leading zeros of the 42-bit suffix + 1 (suffix 0 => 43)
-      val regs = sh
-        .select(col("source"), (col("v") % 64).as("idx"),
-          expr("CASE WHEN v div 64 = 0 THEN 43 ELSE 43 - length(bin(v div 64)) END").as("rho"))
-        .groupBy("source", "idx").agg(max("rho").as("m"))
-      val hll = regs.groupBy("source").agg(
-        count(lit(1)).as("n_regs"),
-        sum(expr("shiftleft(CAST(1 AS BIGINT), 43 - m)")).as("s_present"))
-      val exact = sh.distinct().groupBy("source")
-        .agg(count(lit(1)).as("n_exact"))
-      hll.join(exact, "source")
-        .select(col("source"), col("n_exact"),
-          (lit(64L) - col("n_regs")).as("n_empty_regs"),
-          expr("s_present + (64 - n_regs) * 8796093022208").as("s_scaled"))
-        .withColumn("hll_est", expr("3193052135805681664 div (125 * s_scaled)"))
-        .withColumn("err_permille", expr("abs(hll_est - n_exact) * 1000 div n_exact"))
-        .orderBy("source")
-    },
-    Some(s"""WITH hv AS (
+  val q110 = Q.sql("q110_hll_distinct_audit",
+    s"""WITH hv AS (
       SELECT DISTINCT source,
         list_reduce(list_prepend(CAST(0 AS BIGINT),
           list_transform(generate_series(1, 12), i ->
@@ -1773,7 +1535,7 @@ object TextQueries {
       abs(3193052135805681664 // (125 * (h.s_present + (64 - h.n_regs) * 8796093022208))
         - ex.n_exact) * 1000 // ex.n_exact AS err_permille
     FROM h JOIN ex USING (source)
-    ORDER BY h.source"""))
+    ORDER BY h.source""")
 
   /** OR-folds a single-column `pos` frame (values in [0, 2²⁴)) into the
     * m = 2²⁴-bit Bloom bit array: a map-side-combinable groupBy on the

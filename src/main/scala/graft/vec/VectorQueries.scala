@@ -67,20 +67,8 @@ object VectorQueries {
       "CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (acc, x) -> acc + x)"
 
   // ---------------------------------------------------------------- q34
-  val q34 = Q("q34_embedding_stats",
-    (s, dir) => {
-      Tables(s, dir, "embeddings").orderBy("vec_id")
-        .withColumn("dim", size(col("embedding")).cast("long"))
-        .withColumn("norm2", expr(norm2Expr("embedding")))
-        .withColumn("norm", sqrt(col("norm2")))
-        .withColumn("comp_sum", expr(
-          "CAST(aggregate(embedding, CAST(0 AS DECIMAL(30,8)), (acc, x) -> " +
-            "CAST(acc + CAST(round(CAST(x AS DOUBLE), 8) AS DECIMAL(30,8)) AS DECIMAL(30,8))) AS DOUBLE)"))
-        .withColumn("comp_min", array_min(col("embedding")).cast("double"))
-        .withColumn("comp_max", array_max(col("embedding")).cast("double"))
-        .select("vec_id", "label", "dim", "norm2", "norm", "comp_sum", "comp_min", "comp_max")
-    },
-    Some(s"""WITH n AS (
+  val q34 = Q.sql("q34_embedding_stats",
+    s"""WITH n AS (
       SELECT vec_id, label,
         CAST(len(embedding) AS BIGINT) AS dim,
         ${norm2Sql("embedding")} AS norm2,
@@ -91,7 +79,7 @@ object VectorQueries {
       FROM embeddings
     )
     SELECT vec_id, label, dim, norm2, sqrt(norm2) AS norm, comp_sum, comp_min, comp_max
-    FROM n ORDER BY vec_id"""))
+    FROM n ORDER BY vec_id""")
 
   // ---------------------------------------------------------------- q35
   val q35 = Q.sql("q35_label_centroids",
@@ -1824,39 +1812,8 @@ object VectorQueries {
     * distortion ratio is two single IEEE divisions and the decile
     * bucket an integer truncation of ratio·10.
     */
-  val q131 = Q("q131_jl_distortion_audit",
-    (s, dir) => {
-      // sign(d, j) = +1/−1 from an integer hash — mirrored verbatim
-      def sgn(j: Int) =
-        s"transform(sequence(1, size(embedding)), d -> " +
-          s"CAST(CASE WHEN (d * 31 + $j * 131) % 97 % 2 = 0 THEN 1.0 ELSE -1.0 END AS DOUBLE))"
-      val projCols = (1 to 16).map(j =>
-        expr(s"aggregate(zip_with(embedding, ${sgn(j)}, (x, g) -> CAST(x AS DOUBLE) * g), " +
-          s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)").as(s"y$j"))
-      val proj = Tables(s, dir, "embeddings", spreadOk = true)
-        .select(col("vec_id") +: col("embedding") +: projCols: _*)
-      val a = proj.select(col("vec_id").as("id_a") +: col("embedding").as("ea") +:
-        (1 to 16).map(j => col(s"y$j").as(s"ya$j")): _*)
-      val b = proj.select(col("vec_id").as("id_b") +: col("embedding").as("eb") +:
-        (1 to 16).map(j => col(s"y$j").as(s"yb$j")): _*)
-      val d16 = (1 to 16).map(j =>
-        expr(s"(ya$j - yb$j) * (ya$j - yb$j)")).reduce(_ + _)
-      val pairs = a.join(b, col("id_b") === col("id_a") + 97)
-        .withColumn("d64", expr(
-          "aggregate(zip_with(ea, eb, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * " +
-            "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"))
-        .withColumn("d16", d16)
-        .filter(col("d64") > 0)
-        .withColumn("ratio", (col("d16") / 16.0) / col("d64"))
-        // floor, not a bare cast: DuckDB CAST(double AS BIGINT) ROUNDS
-        // while Spark truncates — floor() first is exact in both
-        .withColumn("decile", expr("least(CAST(floor(ratio * 10) AS BIGINT), 30L)"))
-      pairs.groupBy("decile")
-        .agg(count(lit(1)).as("n_pairs"))
-        .select("decile", "n_pairs")
-        .orderBy("decile")
-    },
-    Some("""WITH proj AS (
+  val q131 = Q.sql("q131_jl_distortion_audit",
+    """WITH proj AS (
       SELECT vec_id, embedding,
         list_transform(generate_series(1, 16), j ->
           list_reduce(list_prepend(0.0::DOUBLE,
@@ -1885,7 +1842,7 @@ object VectorQueries {
     SELECT least(CAST(floor((d16 / 16) / d64 * 10) AS BIGINT), 30) AS decile,
       CAST(count(*) AS BIGINT) AS n_pairs
     FROM pairs WHERE d64 > 0
-    GROUP BY 1 ORDER BY decile"""))
+    GROUP BY 1 ORDER BY decile""")
 
   // --------------------------------------------------------------- q138
   /** Dimension-truncation recall sweep — q131's operational twin: keep

@@ -72,4 +72,24 @@ class ArraySchemaSpec extends SparkTestBase {
       assert(r.getDouble(3) === 10.0)         // 100 levels always fill qty 10
     }
   }
+
+  // The same checks on an in-repo input: the recorder's synthesized
+  // depth-100 book has the reference recording's 8 + 4·100 layout.
+  test("in-repo depth-100 wide book (408 cols) converts and computes via array HOFs") {
+    val deep = graft.streaming.Recorder.synthesizeBook(spark.range(60).toDF("value"), 100)
+    assert(deep.columns.length === 8 + 4 * 100)
+    val a100 = SyntheticBook.toArraySchema(deep, 100)
+      .withColumn("imb", BookMetrics.imbalanceDepthKArray(col("bids"), col("asks")))
+      .withColumn("ntl_bid", BookMetrics.notionalDepthArray(col("bids")))
+      .withColumn("slope_bid", BookMetrics.bookSlopeArray(col("bids")))
+      .withColumn("walk", graft.impact.Impact.walkArray(col("asks"), lit(10.0)))
+    val rows = a100.select("imb", "ntl_bid", "slope_bid", "walk.filled").collect()
+    assert(rows.length === 60)
+    rows.foreach { r =>
+      val imb = r.getDouble(0)
+      assert(imb >= 0.0 && imb <= 1.0)
+      assert(r.getDouble(1) > 0.0)
+      assert(r.getDouble(3) === 10.0)
+    }
+  }
 }

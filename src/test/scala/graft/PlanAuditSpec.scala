@@ -37,6 +37,45 @@ class PlanAuditSpec extends SparkTestBase {
       "status filter must reach the orders scan")
   }
 
+  // Each of these texts sorts its narrow base in a subquery, so the global
+  // Sort and its range exchange sit below the kernel projection and the
+  // range sample does not re-run the kernel. Only this case pins that.
+  test("sort-early texts: the global sort's range exchange sits below the kernel projection") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SortExec, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def unwrap(n: SparkPlan): SparkPlan = n match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case o => o
+    }
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false") // exchanges are planned up front, not per stage
+    try for (name <- Seq("q27_text_stats", "q28_lang_id", "q30_shingle_stats",
+        "q31_minhash_signatures", "q32_simhash", "q34_embedding_stats",
+        "q50_deep_book_array", "q53_rolling_fingerprint", "q57_bpe_tokens")) {
+      var node = unwrap(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      var computes = false
+      while (node.isInstanceOf[ProjectExec]) {
+        val p = node.asInstanceOf[ProjectExec]
+        computes ||= p.projectList.exists(!_.isInstanceOf[Attribute])
+        node = unwrap(p.child)
+      }
+      assert(computes, s"$name: the kernel projection must sit above the global sort")
+      node match {
+        case s: SortExec if s.global =>
+          assert(unwrap(s.child) match {
+            case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+            case _ => false
+          }, s"$name: the global sort must read its range exchange")
+        case other => fail(s"$name: expected the global sort below the projections, found ${other.nodeName}")
+      }
+    } finally spark.conf.set(key, before)
+  }
+
   test("q13: all series windows share ONE shuffle on the series key") {
     val p = plan("q13_ofi_l1_strict")
     assert("Exchange hashpartitioning".r.findAllIn(p).size === 1,
